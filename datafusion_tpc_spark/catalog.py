@@ -127,6 +127,60 @@ def _source_fingerprint(src: str):
     return ("dir", st.st_mtime_ns, entries)
 
 
+def source_fingerprint(src: str) -> str:
+    """The state string every derived cache key and catalog table name
+    is built from — the ONE source fingerprint in the package. A file
+    gives exactly ``f"{mtime_ns}:{size}"`` (the format every existing
+    key was derived from, so keys stay byte-identical); a
+    directory-shaped table gives a digest over its part files
+    (_source_fingerprint), so an in-place part rewrite re-keys too
+    — the directory's own stat does not move when a child is
+    rewritten. Raises OSError for a missing source."""
+    if not os.path.isdir(src):
+        st = os.stat(src)
+        return f"{st.st_mtime_ns}:{st.st_size}"
+    fp = _source_fingerprint(src)
+    if fp is None:
+        raise FileNotFoundError(src)
+    return "dir:" + hashlib.md5(repr(fp).encode()).hexdigest()[:16]
+
+
+def data_bytes(path: str) -> float:
+    """On-disk bytes of a file, or the sum of a directory's data files
+    (recursively; ``_``/``.``-prefixed names are Spark/Hadoop metadata
+    and skipped). Unreadable → ``inf``: a size that cannot be read
+    counts as LARGE, so no gate forces a broadcast it cannot justify.
+    (``os.path.getsize`` on a directory-shaped table returns the
+    directory inode's 4096 bytes — the bug this walker replaces.)"""
+
+    def _fail(err: OSError):
+        raise err
+
+    try:
+        if not os.path.isdir(path):
+            return os.stat(path).st_size
+        total = 0
+        for d, subdirs, files in os.walk(path, onerror=_fail):
+            subdirs[:] = [s for s in subdirs if not s.startswith(("_", "."))]
+            for f in files:
+                if not f.startswith(("_", ".")):
+                    total += os.stat(os.path.join(d, f)).st_size
+        return total
+    except OSError:
+        return float("inf")
+
+
+SMALL_TABLE_BYTES = 1 << 30
+
+
+def small_table(sf_dir: str, table: str) -> bool:
+    """The ONE scale gate: is ``<sf_dir>/<table>.parquet`` under
+    SMALL_TABLE_BYTES of data? Callers keep an explicit broadcast (or
+    a byte-light fan-out) only below it; past it the hint drops and
+    the planner/AQE decide. README "Scale gates" lists every caller."""
+    return data_bytes(os.path.join(sf_dir, f"{table}.parquet")) < SMALL_TABLE_BYTES
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table; normalizes events.ts ns→µs timestamp.
 
@@ -164,14 +218,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-_PARTSUPP_CACHE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    ".cache",
-    "partsupp",
-)
-_PARTSUPP_LOCK = threading.Lock()
-
-
 def pid_alive(pid: int) -> bool:
     """Is a cache/run dir's owning process still running? Used by the
     streaming run-dir pruners (ADVICE r14): a dir name embeds its
@@ -200,10 +246,9 @@ def prune_stale_cache_dirs(
     for live_key's sf-tag prefix (ADVICE r6: every testdata drop that
     replaces a source parquet would otherwise leak a full derived
     copy forever). The ONE pruning implementation for every
-    `<tag>-<fingerprint>` cache in the repo (partsupp, zorder/compact
-    layouts, the late-replay fixture, bucketed tables, the
-    layout-optimized bench copies) — review r7 found the age-gate
-    logic duplicated and drifting.
+    `<tag>-<fingerprint>` cache in the repo (every materialize and
+    session_table cache, the layout-optimized bench copies) — review
+    r7 found the age-gate logic duplicated and drifting.
 
     Two-phase supersession marking (review r7 #2): an entry's own
     mtime is its BUILD time, so age-gating on it would delete a
@@ -267,13 +312,116 @@ def prune_stale_cache_dirs(
             pass
 
 
-def derived_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
+# One build lock per cache key / catalog table name, not per module:
+# a builder may call another builder (the upserted IVF index needs the
+# full index's codebook) without nesting one non-reentrant lock, and
+# unrelated caches never serialize behind each other.
+_KEY_LOCKS: dict[tuple, threading.Lock] = {}
+
+
+def _key_lock(*key) -> threading.Lock:
+    with _MEMO_LOCK:
+        return _KEY_LOCKS.setdefault(key, threading.Lock())
+
+
+READY = "_READY"
+
+
+def materialize(root: str, key: str, build, **prune) -> str:
+    """The ONE build path for a derived cache shared across processes;
+    returns ``<root>/<key>``. ``key`` is ``<prefix>-<fingerprint>``
+    (the prefix names the cache family per sf_dir, the fingerprint is
+    derived from source_fingerprint plus the recipe constants).
+
+    Published = the directory exists AND holds the READY marker. A
+    directory at ``<root>/<key>`` without it is an interrupted or
+    legacy build and is removed. Otherwise ``build(tmp)`` fills a fresh
+    ``<key>.<uuid>`` directory (it may write content into the marker,
+    which is only ever appended to), the marker is written and the
+    directory is atomically renamed into place; a process that loses
+    the rename race discards its copy. In-process threads serialize on
+    the key's lock, so a cold key builds exactly once per process. A
+    failed build removes its tmp and re-raises. Last, the two-phase
+    prune (``prune`` is passed through) reclaims superseded
+    fingerprints of the same prefix — and orphaned ``<key>.<uuid>``
+    dirs of killed builders, which share that prefix."""
+    import shutil
+    import uuid
+
+    path = os.path.join(root, key)
+    ready = os.path.join(path, READY)
+    if os.path.exists(ready):
+        return path
+    with _key_lock(root, key):
+        if os.path.exists(ready):
+            return path
+        shutil.rmtree(path, ignore_errors=True)
+        tmp = f"{path}.{uuid.uuid4().hex[:8]}"
+        os.makedirs(tmp)
+        try:
+            build(tmp)
+            open(os.path.join(tmp, READY), "a").close()
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        try:
+            os.replace(tmp, path)
+        except OSError:
+            # lost the rename race to a concurrent process: its
+            # published copy serves, ours was spare
+            shutil.rmtree(tmp, ignore_errors=True)
+            if not os.path.exists(ready):
+                raise
+        prune_stale_cache_dirs(root, key, **prune)
+    return path
+
+
+def session_table(
+    spark: SparkSession, root: str, name: str, dir_key: str, build
+) -> str:
+    """The ONE build path for a per-session bucketed catalog table
+    (bucketBy needs saveAsTable, so the catalog entry is per-session
+    and rebuilt lazily by a foreign session); returns ``name``.
+
+    Under ``name``'s lock, when the session has no such table,
+    ``build(d)`` writes it (saveAsTable with ``.option("path", ...)``
+    under ``d``) into ``d = <root>/<dir_key>-<pid>`` — per-PID, so two
+    processes never interleave writes under one path. Publish guard:
+    if the build fails after a first saveAsTable already registered
+    the table (a base write followed by an ingest append), the table
+    is dropped, so no later call in the session serves a half-built
+    index; the DROP is best effort and the ORIGINAL error always
+    propagates. Superseded ``<dir_key prefix>-`` dirs are then
+    reclaimed by the two-phase prune."""
+    with _key_lock("table", name):
+        if not spark.catalog.tableExists(name):
+            dir_key = f"{dir_key}-{os.getpid()}"
+            try:
+                build(os.path.join(root, dir_key))
+            except BaseException:
+                try:
+                    spark.sql(f"DROP TABLE IF EXISTS {name}")
+                except Exception:
+                    pass
+                raise
+            prune_stale_cache_dirs(root, dir_key)
+    return name
+
+
+_PARTSUPP_CACHE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    ".cache",
+    "partsupp",
+)
+
+
+def partsupp_dir(spark: SparkSession, sf_dir: str) -> str:
     """The derived partsupp table (tpch_full.py module docstring),
     MATERIALIZED once per (sf_dir, lineitem fingerprint) instead of
     re-aggregated inside every execution of TPC-H q2/q9/q11/q16/q20
     (VERDICT r5 item 3: the per-query derivation made q_tpch_q9 the
     suite's worst contention amplifier — 20.16 s under 12-concurrent
-    while 0.69 s serial, BASELINE.md).
+    while 0.69 s serial, BASELINE.md); returns its directory.
 
     This is exactly what a 100 TB deployment does: partsupp is a
     persisted derived table maintained by the ingest pipeline, not a
@@ -282,71 +430,31 @@ def derived_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly, and parquet round-trips doubles losslessly — so the
     DuckDB oracles keep deriving the CTE inline and still hash-match.
 
-    Cache key = <sf_dir tag>-<md5(lineitem mtime_ns, size)> — the
-    _evolve_dirs fingerprint pattern (testdata drops replace files at
-    the same path); the sf_dir tag prefix lets superseded fingerprints
-    of the SAME sf_dir be pruned when a fresh one is built (ADVICE r6:
-    they leaked unboundedly before). The build races safely:
-    in-process threads serialize on a lock (the 12-concurrent bench),
-    and the write goes to a uuid temp dir atomically renamed into
-    place."""
+    Cache key = <md5(sf_dir)>-<md5(lineitem fingerprint)>; legacy
+    un-prefixed keys predate this format and are pruned too."""
     configure_runtime(spark)
-    st = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
     sf_tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    fp = hashlib.md5(f"{st.st_mtime_ns}:{st.st_size}".encode()).hexdigest()[:12]
-    key = f"{sf_tag}-{fp}"
-    path = os.path.join(_PARTSUPP_CACHE, key)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        with _PARTSUPP_LOCK:
-            if not os.path.exists(os.path.join(path, "_SUCCESS")):
-                import uuid
+    fp = hashlib.md5(
+        source_fingerprint(os.path.join(sf_dir, "lineitem.parquet")).encode()
+    ).hexdigest()[:12]
 
-                li = load_table(spark, sf_dir, "lineitem")
-                ps = li.groupBy(
-                    F.col("l_partkey").alias("ps_partkey"),
-                    F.col("l_suppkey").alias("ps_suppkey"),
-                ).agg(
-                    F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias(
-                        "ps_supplycost"
-                    ),
-                    F.sum("l_quantity").alias("ps_availqty"),
-                )
-                tmp = path + "." + uuid.uuid4().hex[:8]
-                ps.write.mode("overwrite").parquet(tmp)
-                try:
-                    os.replace(tmp, path)
-                except OSError:  # lost a cross-process race; ours is spare
-                    import shutil
+    def build(tmp: str) -> None:
+        li = load_table(spark, sf_dir, "lineitem")
+        li.groupBy(
+            F.col("l_partkey").alias("ps_partkey"),
+            F.col("l_suppkey").alias("ps_suppkey"),
+        ).agg(
+            F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias(
+                "ps_supplycost"
+            ),
+            F.sum("l_quantity").alias("ps_availqty"),
+        ).write.mode("overwrite").parquet(tmp)
 
-                    shutil.rmtree(tmp, ignore_errors=True)
-                # Superseded fingerprints of the same sf_dir are dead
-                # (one live lineitem per sf_dir); legacy un-prefixed
-                # keys predate this key format.
-                prune_stale_cache_dirs(_PARTSUPP_CACHE, key, prune_legacy=True)
-    return spark.read.parquet(path)
+    return materialize(_PARTSUPP_CACHE, f"{sf_tag}-{fp}", build, prune_legacy=True)
 
 
-def derived_partsupp_bytes(sf_dir: str) -> int:
-    """On-disk size of the CURRENT materialized partsupp for sf_dir
-    (0 if not yet built). Lets callers gate broadcast hints on actual
-    data volume instead of hard-coding them (ADVICE r6: q_tpch_q9's
-    unconditional F.broadcast(ps) overrides autoBroadcastJoinThreshold
-    and would OOM, not fall back, once ps outgrows memory)."""
-    st_path = os.path.join(sf_dir, "lineitem.parquet")
-    try:
-        st = os.stat(st_path)
-    except OSError:
-        return 0
-    sf_tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    fp = hashlib.md5(f"{st.st_mtime_ns}:{st.st_size}".encode()).hexdigest()[:12]
-    path = os.path.join(_PARTSUPP_CACHE, f"{sf_tag}-{fp}")
-    total = 0
-    try:
-        for f in os.listdir(path):
-            total += os.path.getsize(os.path.join(path, f))
-    except OSError:
-        return 0
-    return total
+def derived_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.parquet(partsupp_dir(spark, sf_dir))
 
 
 def register_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

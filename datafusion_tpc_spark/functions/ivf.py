@@ -44,7 +44,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from datafusion_tpc_spark.catalog import load_table
+from datafusion_tpc_spark.catalog import load_table, source_fingerprint
 from datafusion_tpc_spark.functions.literals import values_df
 from datafusion_tpc_spark.functions.digest import _h60_duck, cosine
 from datafusion_tpc_spark.functions.lloyd import assign, d2_expr, duck_iter, update
@@ -105,7 +105,7 @@ def _renorm(cents):
 # consumers (q_sim_ivf/_batch, q_sim_ivfeval/_batch, q_sim_ivf_sweep,
 # q_sim_ivf_served/_batch) build the identical index per session —
 # without the memo each re-runs the full Lloyd lineage. Keyed by the source
-# parquet's (path, mtime_ns, size) + the training constants, NOT
+# parquet's path + catalog.source_fingerprint + the training constants, NOT
 # sf_dir alone (the derived-fixture staleness gotcha: testdata drops
 # replace files at the same path). Values are plain Python lists
 # (≤ IVF_K · IVF_DIM doubles); a concurrent race just recomputes the
@@ -116,8 +116,8 @@ _CODEBOOK_MEMO: dict[tuple, list] = {}
 def _trained_codebook(spark, sf_dir, v):
     import os
 
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    key = (sf_dir, st.st_mtime_ns, st.st_size, IVF_K, IVF_ITERS)
+    src = os.path.join(sf_dir, "embeddings.parquet")
+    key = (sf_dir, source_fingerprint(src), IVF_K, IVF_ITERS)
     if key not in _CODEBOOK_MEMO:
         cents = v.join(
             F.broadcast(seed_pick(v, "ivf:", IVF_K)), "vec_id"

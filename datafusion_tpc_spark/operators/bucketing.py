@@ -19,29 +19,30 @@ The bucketed copies are built once per session into .cache/bucketed
 (external tables — data survives, catalog entries are per-session and
 rebuilt lazily). A foreign session (the external driver's) rebuilds
 on first call; subsequent calls in the same session reuse the catalog
-entry. Both the table NAME and the data dir carry the source's
-(mtime, size) fingerprint — a testdata drop mid-session rebuilds
+entry. Both the table NAME and the data dir carry the source
+fingerprint — a testdata drop mid-session rebuilds
 instead of serving stale buckets — and the dir is additionally
 per-PID: two processes building concurrently land in disjoint dirs
 instead of interleaving writes under one path (review r7 — a
 pytest+mirror overlap flaked exactly this way); in-process threads
-serialize on a lock around the exists-check+build (the 12-concurrent
-bench would otherwise double-build one table name). Superseded dirs
-are reclaimed by catalog.prune_stale_cache_dirs.
+serialize on the table name's lock around the exists-check+build (the
+12-concurrent bench would otherwise double-build one table name).
+catalog.session_table owns that whole story, and the reclamation of
+superseded dirs.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
-import threading
 
 from pyspark.sql import functions as F
 
 from datafusion_tpc_spark.catalog import (
     load_table,
-    prune_stale_cache_dirs,
     sanitized_sf_tag,
+    session_table,
+    source_fingerprint,
 )
 from datafusion_tpc_spark.registry import query
 
@@ -49,12 +50,6 @@ _N_BUCKETS = 8
 _CACHE_ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".cache", "bucketed"
 )
-_BKT_LOCK = threading.Lock()
-
-
-# Single shared implementation (review r11: the per-site copies
-# drifted and ivf_served kept the unsanitized form) — see catalog.
-_sf_tag = sanitized_sf_tag
 
 
 def _bucketed_table(spark, sf_dir: str, table: str, key: str) -> str:
@@ -62,38 +57,25 @@ def _bucketed_table(spark, sf_dir: str, table: str, key: str) -> str:
     return its name. Write cost is paid once per (session, sf,
     source fingerprint); see module docstring for the race and
     staleness story."""
-    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-    fp = hashlib.md5(f"{st.st_mtime_ns}:{st.st_size}".encode()).hexdigest()[:12]
-    tag = _sf_tag(sf_dir)
+    src = os.path.join(sf_dir, f"{table}.parquet")
+    fp = hashlib.md5(source_fingerprint(src).encode()).hexdigest()[:12]
+    tag = sanitized_sf_tag(sf_dir)
     name = f"{table}_bkt_{tag}_{fp}"
-    with _BKT_LOCK:
-        if not spark.catalog.tableExists(name):
-            # Prune-prefix is namespaced PER TABLE (ADVICE r7): a
-            # shared `{tag}-` prefix let building lineitem mark the
-            # freshly built, catalog-referenced orders dir superseded
-            # (and vice versa), so a later build event could delete
-            # live data out from under the sibling table's reads.
-            dir_key = f"{tag}_{table}-{fp}-{os.getpid()}"
-            path = os.path.join(_CACHE_ROOT, dir_key, table)
-            (
-                load_table(spark, sf_dir, table)
-                .write.mode("overwrite")
-                .option("path", path)
-                .bucketBy(_N_BUCKETS, key)
-                .sortBy(key)
-                .saveAsTable(name)
-            )
-            prune_stale_cache_dirs(_CACHE_ROOT, dir_key)
-            # One-time sweep of pre-r8 shared-prefix dirs
-            # ({tag}-{fp}-{pid}): the per-table rename above means
-            # they match no live prefix anymore and would leak
-            # forever (review r8). No new-scheme entry starts with
-            # "{tag}-" (they start "{tag}_{table}-"), so everything
-            # under the old prefix is superseded; the sentinel key
-            # exists on no disk, and two-phase marking still gives
-            # any straggler pre-r8 process its 6 h reader window.
-            prune_stale_cache_dirs(_CACHE_ROOT, f"{tag}-r8-prefix-rename")
-    return name
+
+    def build(d: str) -> None:
+        (
+            load_table(spark, sf_dir, table)
+            .write.mode("overwrite")
+            .option("path", os.path.join(d, table))
+            .bucketBy(_N_BUCKETS, key)
+            .sortBy(key)
+            .saveAsTable(name)
+        )
+
+    # The dir prefix is namespaced PER TABLE (ADVICE r7): a shared
+    # `{tag}-` prefix let building lineitem mark the freshly built,
+    # catalog-referenced orders dir superseded (and vice versa).
+    return session_table(spark, _CACHE_ROOT, name, f"{tag}_{table}-{fp}", build)
 
 
 @query(

@@ -30,14 +30,14 @@ from __future__ import annotations
 
 import hashlib
 import os
-import threading
 
 from pyspark.sql import functions as F
 
 from datafusion_tpc_spark.catalog import (
     load_table,
-    prune_stale_cache_dirs,
     sanitized_sf_tag,
+    session_table,
+    source_fingerprint,
 )
 from datafusion_tpc_spark.functions.digest import (
     SPLIT_TRAIN_LT,
@@ -72,7 +72,16 @@ _CACHE_ROOT = os.path.join(
     ".cache",
     "decontam_served",
 )
-_DCS_LOCK = threading.Lock()
+
+
+def _write_spans(hashes, name: str, path: str, mode: str = "overwrite") -> None:
+    (
+        hashes.write.mode(mode)
+        .option("path", path)
+        .bucketBy(_SRV_BUCKETS, "h")
+        .sortBy("h")
+        .saveAsTable(name)
+    )
 
 
 def _index_fingerprint(sf_dir: str) -> str:
@@ -80,9 +89,9 @@ def _index_fingerprint(sf_dir: str) -> str:
     a helper (ADVICE r13) so tests targeting the catalog table derive
     its name from HERE instead of re-deriving the recipe inline — a
     recipe change must not silently retarget them at a stale name."""
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
+    st = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
     return hashlib.md5(
-        f"{st.st_mtime_ns}:{st.st_size}:{_SUB_L}:{_SUB_S}:"
+        f"{st}:{_SUB_L}:{_SUB_S}:"
         f"{SPLIT_TRAIN_LT}:{_SRV_BUCKETS}".encode()
     ).hexdigest()[:12]
 
@@ -95,33 +104,22 @@ def _train_span_index(spark, sf_dir: str) -> str:
     """Ensure the bucketed train-span-hash table exists for this
     source fingerprint; return its catalog name. Same once-per-
     (session, sf, fingerprint) build/race/staleness story as
-    operators/lsh_served.py (lock around exists-check+build, per-PID
-    dir, per-prefix prune)."""
+    operators/lsh_served.py (catalog.session_table)."""
     fp = _index_fingerprint(sf_dir)
     tag = sanitized_sf_tag(sf_dir)
     name = f"train_spans_{tag}_{fp}"
-    with _DCS_LOCK:
-        if not spark.catalog.tableExists(name):
-            dir_key = f"{tag}_dcs-{fp}-{os.getpid()}"
-            path = os.path.join(_CACHE_ROOT, dir_key, "spans")
-            docs = load_table(spark, sf_dir, "documents").select(
-                "doc_id", "text"
-            )
-            train_h = (
-                docs.filter(split_bucket() < SPLIT_TRAIN_LT)
-                .select(F.explode(F.expr(_WIN_EXPR)).alias("s"))
-                .select(h60(F.col("s")).alias("h"))
-                .distinct()
-            )
-            (
-                train_h.write.mode("overwrite")
-                .option("path", path)
-                .bucketBy(_SRV_BUCKETS, "h")
-                .sortBy("h")
-                .saveAsTable(name)
-            )
-            prune_stale_cache_dirs(_CACHE_ROOT, dir_key)
-    return name
+
+    def build(d: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        train_h = (
+            docs.filter(split_bucket() < SPLIT_TRAIN_LT)
+            .select(F.explode(F.expr(_WIN_EXPR)).alias("s"))
+            .select(h60(F.col("s")).alias("h"))
+            .distinct()
+        )
+        _write_spans(train_h, name, os.path.join(d, "spans"))
+
+    return session_table(spark, _CACHE_ROOT, name, f"{tag}_dcs-{fp}", build)
 
 
 def _probe_hash_counts(spark, sf_dir, pred):
@@ -353,13 +351,7 @@ def _merge_ingest_batch(
         batch_df = values_df(spark, [(h,) for h in hs], "h long")
         existing = spark.table(name).filter(F.col("h").isin(hs))
         new_rows = batch_df.join(existing, "h", "left_anti")
-        (
-            new_rows.write.mode("append")
-            .option("path", path)
-            .bucketBy(_SRV_BUCKETS, "h")
-            .sortBy("h")
-            .saveAsTable(name)
-        )
+        _write_spans(new_rows, name, path, mode="append")
         return
     batch = batch.persist()
     try:
@@ -368,13 +360,7 @@ def _merge_ingest_batch(
         new_rows = batch.hint("merge").join(
             spark.table(name).select("h"), "h", "left_anti"
         )
-        (
-            new_rows.write.mode("append")
-            .option("path", path)
-            .bucketBy(_SRV_BUCKETS, "h")
-            .sortBy("h")
-            .saveAsTable(name)
-        )
+        _write_spans(new_rows, name, path, mode="append")
     finally:
         batch.unpersist()
 
@@ -394,53 +380,29 @@ def _upserted_span_index(spark, sf_dir: str) -> str:
     forms (IN-list point read vs at-scale SortMergeJoin) and the
     bound on each. Maintenance cost is the batch's own windowing +
     one pruned point read + a |new hashes|-row append — independent
-    of corpus size."""
+    of corpus size. A failed merge drops the base table
+    (session_table's publish guard, ADVICE r14/r15): an unmerged index
+    left registered would silently undercount contamination."""
     fp = hashlib.md5(
         f"up:{_index_fingerprint(sf_dir)}:{DCS_INGEST_LT}".encode()
     ).hexdigest()[:12]
     tag = sanitized_sf_tag(sf_dir)
     name = f"train_spans_up_{tag}_{fp}"
-    with _DCS_LOCK:
-        if not spark.catalog.tableExists(name):
-            dir_key = f"{tag}_dcsup-{fp}-{os.getpid()}"
-            path = os.path.join(_CACHE_ROOT, dir_key, "spans")
-            docs = load_table(spark, sf_dir, "documents").select(
-                "doc_id", "text"
-            )
-            base_h = (
-                docs.filter(F.col("doc_id") >= DCS_INGEST_LT)
-                .filter(split_bucket() < SPLIT_TRAIN_LT)
-                .select(F.explode(F.expr(_WIN_EXPR)).alias("s"))
-                .select(h60(F.col("s")).alias("h"))
-                .distinct()
-            )
-            (
-                base_h.write.mode("overwrite")
-                .option("path", path)
-                .bucketBy(_SRV_BUCKETS, "h")
-                .sortBy("h")
-                .saveAsTable(name)
-            )
-            try:
-                _merge_ingest_batch(
-                    spark, name, path, _ingest_hashes(spark, sf_dir)
-                )
-            except BaseException:
-                # Two-step publish guard (ADVICE r14): the base
-                # saveAsTable above has already registered the table,
-                # so a failed merge must not leave the UNMERGED index
-                # servable — every later tableExists() call in the
-                # session would silently undercount contamination.
-                # Best-effort DROP (ADVICE r15): if the session/JVM is
-                # the thing that failed, the cleanup itself raises —
-                # the ORIGINAL exception must still propagate.
-                try:
-                    spark.sql(f"DROP TABLE IF EXISTS {name}")
-                except BaseException:
-                    pass
-                raise
-            prune_stale_cache_dirs(_CACHE_ROOT, dir_key)
-    return name
+
+    def build(d: str) -> None:
+        path = os.path.join(d, "spans")
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        base_h = (
+            docs.filter(F.col("doc_id") >= DCS_INGEST_LT)
+            .filter(split_bucket() < SPLIT_TRAIN_LT)
+            .select(F.explode(F.expr(_WIN_EXPR)).alias("s"))
+            .select(h60(F.col("s")).alias("h"))
+            .distinct()
+        )
+        _write_spans(base_h, name, path)
+        _merge_ingest_batch(spark, name, path, _ingest_hashes(spark, sf_dir))
+
+    return session_table(spark, _CACHE_ROOT, name, f"{tag}_dcsup-{fp}", build)
 
 
 @query("q_dedup_decontam_upsert", oracle=_DCS_SERVED_ORACLE)

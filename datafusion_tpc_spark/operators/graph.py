@@ -32,11 +32,10 @@ dedup.py:559).
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import functions as F
 
-from datafusion_tpc_spark.catalog import load_table
+from datafusion_tpc_spark.catalog import load_table, small_table
 from datafusion_tpc_spark.functions.literals import values_df
 from datafusion_tpc_spark.registry import query
 
@@ -246,19 +245,14 @@ def q_graph_triangles(spark, sf_dir):
     # with the edge set broadcast (1.2M int pairs ≈ 10 MB) the wedge
     # join pipelines straight into a broadcast semi probe + explode +
     # partial agg in ONE stage. The hint is SIZE-GATED on the
-    # lineitem source bytes (the q_tpch_q9 derived_partsupp_bytes
-    # pattern — review r7: the unconditional hint overrode
+    # lineitem source bytes (catalog.small_table — review r7: the
+    # unconditional hint overrode
     # autoBroadcastJoinThreshold and would OOM past broadcastable
     # |edges| instead of falling back): < 1 GB of lineitem parquet
     # keeps the distinct (u,v) int-pair set well under broadcast
     # limits; beyond that, no hint — AQE still converts at runtime
     # when the actual built size fits, else keeps the shuffled joins.
-    try:
-        li_small = (
-            os.path.getsize(os.path.join(sf_dir, "lineitem.parquet")) < 1 << 30
-        )
-    except OSError:
-        li_small = False
+    li_small = small_table(sf_dir, "lineitem")
     degu = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
     degv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
     if li_small:

@@ -49,16 +49,14 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import shutil
-import threading
-import uuid
 
 from pyspark.sql import functions as F
 
 from datafusion_tpc_spark.catalog import (
     load_table,
-    prune_stale_cache_dirs,
+    materialize,
     sanitized_sf_tag,
+    source_fingerprint,
 )
 from datafusion_tpc_spark.functions.literals import values_df
 from datafusion_tpc_spark.registry import query
@@ -68,12 +66,11 @@ _CACHE_ROOT = os.path.join(
     ".cache",
     "ivf_index",
 )
-_IDX_LOCK = threading.Lock()
 _K = 20  # top-k served (the q_sim_ivf convention)
 
 
 def _index_tag(sf_dir: str) -> str:
-    """Cache key: sf tag + (mtime_ns, size) fingerprint of the source
+    """Cache key: sf tag + catalog.source_fingerprint of the source
     parquet + the TRAINING constants — a testdata drop OR a quantizer
     constant change (e.g. the r11 IVF_ITERS bump) rebuilds instead of
     serving a stale index (the layout.py _source_tag pattern).
@@ -85,51 +82,43 @@ def _index_tag(sf_dir: str) -> str:
     from datafusion_tpc_spark.functions.ivf import IVF_ITERS, IVF_K
 
     tag = sanitized_sf_tag(sf_dir)  # shared path-safe tag (review r11)
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
+    st = source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
     fp = hashlib.md5(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}:"
-        f"{IVF_K}:{IVF_ITERS}".encode()
+        f"{sf_dir}:{st}:{IVF_K}:{IVF_ITERS}".encode()
     ).hexdigest()[:12]
     return f"{tag}-{fp}"
+
+
+def _write_assignment(tmp: str, assigned, codebook, append=None) -> None:
+    """Write the ``partitionBy("cell")`` assignment (plus an optional
+    appended generation) and its codebook into a materialize tmp."""
+    assigned.repartition("cell").write.mode("overwrite").partitionBy(
+        "cell"
+    ).parquet(tmp)
+    if append is not None:
+        append.write.mode("append").partitionBy("cell").parquet(tmp)
+    with open(os.path.join(tmp, "_ivf_codebook.json"), "w") as f:
+        json.dump(codebook, f)
 
 
 def _ivf_index(spark, sf_dir: str) -> tuple[str, list]:
     """Ensure the partitioned assignment + persisted codebook exist;
     return (path, codebook). Build cost is paid once per (sf, source
-    fingerprint); builders follow the shared-cache discipline: lock +
-    uuid temp + atomic rename + two-phase stale pruning."""
-    path = os.path.join(_CACHE_ROOT, _index_tag(sf_dir))
-    meta = os.path.join(path, "_ivf_codebook.json")
-    with _IDX_LOCK:
-        if not os.path.exists(meta):
-            if os.path.exists(path):
-                # dir without its codebook = an interrupted build
-                # (killed between write and rename never leaves this,
-                # but a legacy/partial dir would) — rebuild cleanly
-                shutil.rmtree(path, ignore_errors=True)
-            from datafusion_tpc_spark.functions.ivf import (
-                _trained_codebook,
-                ivf_model,
-            )
+    fingerprint) through catalog.materialize (key lock + uuid temp +
+    atomic rename + two-phase stale pruning)."""
 
-            _, v, _, assigned = ivf_model(spark, sf_dir)
-            codebook = _trained_codebook(spark, sf_dir, v)  # memo hit
-            tmp = os.path.join(_CACHE_ROOT, f"tmp-{uuid.uuid4().hex}")
-            (
-                assigned.repartition("cell")
-                .write.mode("overwrite")
-                .partitionBy("cell")
-                .parquet(tmp)
-            )
-            with open(os.path.join(tmp, "_ivf_codebook.json"), "w") as f:
-                json.dump(codebook, f)
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)  # concurrent winner
-            prune_stale_cache_dirs(_CACHE_ROOT, _index_tag(sf_dir))
-            _sweep_orphan_tmp_dirs()
-    with open(meta) as f:
+    def build(tmp: str) -> None:
+        from datafusion_tpc_spark.functions.ivf import (
+            _trained_codebook,
+            ivf_model,
+        )
+
+        _, v, _, assigned = ivf_model(spark, sf_dir)
+        codebook = _trained_codebook(spark, sf_dir, v)  # memo hit
+        _write_assignment(tmp, assigned, codebook)
+
+    path = materialize(_CACHE_ROOT, _index_tag(sf_dir), build)
+    with open(os.path.join(path, "_ivf_codebook.json")) as f:
         # preserve NULL components (the zero-norm nullif edge) instead
         # of crashing on float(None) — review r11
         codebook = [
@@ -137,36 +126,6 @@ def _ivf_index(spark, sf_dir: str) -> tuple[str, list]:
             for cid, e in json.load(f)
         ]
     return path, codebook
-
-
-def _sweep_orphan_tmp_dirs(max_age_s: int = 21600) -> None:
-    """Reclaim tmp-<uuid> dirs orphaned by a killed build (review r11:
-    prune_stale_cache_dirs only matches '<sf-tag>-' siblings, so an
-    interrupted write would leak a corpus-sized copy per crash).
-    Unlike fingerprint entries, a tmp dir is NEVER read after its
-    rename attempt, so age-gating on its own mtime is safe — a live
-    concurrent build's tmp is necessarily younger than its run (the
-    6 h window matches the prune_stale_cache_dirs reader budget)."""
-    import time
-
-    cutoff = time.time() - max_age_s
-    try:
-        names = os.listdir(_CACHE_ROOT)
-    except OSError:
-        return
-    for name in names:
-        p = os.path.join(_CACHE_ROOT, name)
-        if not name.startswith("tmp-"):
-            continue
-        try:
-            # a concurrent sweeper can remove the entry between
-            # listdir and getmtime (ADVICE r11) — losing the race is
-            # fine, the dir is gone either way
-            stale = os.path.getmtime(p) < cutoff
-        except OSError:
-            continue
-        if stale:
-            shutil.rmtree(p, ignore_errors=True)
 
 
 def ivf_served_candidates(spark, sf_dir: str):
@@ -372,46 +331,27 @@ def _upserted_ivf_index(spark, sf_dir: str) -> tuple[str, list]:
     precondition: production retrains the coarse quantizer per epoch,
     not per batch) and both generations encode through the identical
     assign_cells projection, so the upserted table is row-identical
-    to the full rebuild. Same lock/fingerprint/atomic-rename story as
-    _ivf_index."""
+    to the full rebuild. Same materialize story as _ivf_index; the
+    key lock is per index, so this build runs after _ivf_index has
+    returned (no nested lock)."""
     from datafusion_tpc_spark.functions.ivf import BATCH_N
 
     _, codebook = _ivf_index(spark, sf_dir)  # trained-once quantizer
-    tag = f"{_index_tag(sf_dir).split('-', 1)[0]}up-" + _index_tag(
-        sf_dir
-    ).split("-", 1)[1] + f"-b{BATCH_N}"
-    path = os.path.join(_CACHE_ROOT, tag)
-    meta = os.path.join(path, "_ivf_codebook.json")
-    with _IDX_LOCK:
-        if not os.path.exists(meta):
-            if os.path.exists(path):
-                shutil.rmtree(path, ignore_errors=True)
-            tmp = os.path.join(_CACHE_ROOT, f"tmp-{uuid.uuid4().hex}")
-            base = _ingest_base(spark, sf_dir, codebook)
-            (
-                base.repartition("cell")
-                .write.mode("overwrite")
-                .partitionBy("cell")
-                .parquet(tmp)
-            )
-            # the incremental ingest: |batch| assignment rows appended
-            # into the existing cell=<n> partition dirs — maintenance
-            # cost is the batch's own encode, independent of corpus
-            # size (the lsh_upsert precedent on the band index)
-            (
-                _ingest_assignment(spark, sf_dir, codebook)
-                .write.mode("append")
-                .partitionBy("cell")
-                .parquet(tmp)
-            )
-            with open(os.path.join(tmp, "_ivf_codebook.json"), "w") as f:
-                json.dump(codebook, f)
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)  # concurrent winner
-            prune_stale_cache_dirs(_CACHE_ROOT, tag)
-            _sweep_orphan_tmp_dirs()
+    tag, fp = _index_tag(sf_dir).split("-", 1)
+    # the incremental ingest: |batch| assignment rows appended into
+    # the existing cell=<n> partition dirs — maintenance cost is the
+    # batch's own encode, independent of corpus size (the lsh_upsert
+    # precedent on the band index)
+    path = materialize(
+        _CACHE_ROOT,
+        f"{tag}up-{fp}-b{BATCH_N}",
+        lambda tmp: _write_assignment(
+            tmp,
+            _ingest_base(spark, sf_dir, codebook),
+            codebook,
+            append=_ingest_assignment(spark, sf_dir, codebook),
+        ),
+    )
     return path, codebook
 
 

@@ -39,35 +39,26 @@ from pyspark.sql import functions as F
 
 from datafusion_tpc_spark.catalog import (
     load_table,
-    prune_stale_cache_dirs,
+    materialize,
     sanitized_sf_tag,
+    source_fingerprint,
 )
 from datafusion_tpc_spark.registry import query
 
 
 def _source_tag(sf_dir: str, table: str = "lineitem") -> str:
-    """Cache key for derived-layout copies: sf tag PLUS an (mtime_ns,
-    size) fingerprint of the source parquet. Testdata drops replace
+    """Cache key for derived-layout copies: sf tag PLUS the source
+    parquet's catalog.source_fingerprint. Testdata drops replace
     files at the same path (FIXTURES.md), so a path-only key would
-    serve a stale cached layout against a fresh oracle — the
-    _evolve_dirs pattern (sinks.py, review r5; ADVICE r5 flagged this
-    module still keying by sf tag alone)."""
+    serve a stale cached layout against a fresh oracle (ADVICE r5)."""
     # Path-safe shared tag (review r11): an arbitrary corpus path
     # otherwise leaks '/' into the cache path — nested partitioned
     # dirs (CONFLICTING_DIRECTORY_STRUCTURES) or, absolute, an
     # os.path.join escape outside the cache root.
     tag = sanitized_sf_tag(sf_dir)
-    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-    fp = hashlib.md5(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
+    st = source_fingerprint(os.path.join(sf_dir, f"{table}.parquet"))
+    fp = hashlib.md5(f"{sf_dir}:{st}".encode()).hexdigest()[:12]
     return f"{tag}-{fp}"
-
-
-# Superseded-fingerprint reclamation lives in catalog (one pruning
-# implementation repo-wide; review r7 found this copy drifting from
-# catalog's — notably the age gate that must cover in-flight reads).
-_prune_stale_tags = prune_stale_cache_dirs
 
 _CELLS_BITS = 4  # 16 cells per dimension → 256 z-buckets
 _CACHE_ROOT = os.path.join(
@@ -103,19 +94,12 @@ def _zbucket_col(pcell, scell):
 def _zorder_copy(spark, sf_dir: str) -> tuple[str, int, int]:
     """Ensure the z-clustered lineitem copy exists; returns
     (path, max_partkey, max_suppkey). Maxes persist beside the data so
-    foreign sessions enumerate cells with the writer's exact grid."""
-    path = os.path.join(_CACHE_ROOT, _source_tag(sf_dir))
-    meta = os.path.join(path, "_zorder_meta.json")
-    if os.path.exists(meta):
-        # grid-constant guard: a cached copy built under a different
-        # _CELLS_BITS assigns different cells than box_cover
-        # enumerates — silently wrong pruning; rebuild instead.
-        with open(meta) as f:
-            if json.load(f).get("cells_bits") != _CELLS_BITS:
-                import shutil
+    foreign sessions enumerate cells with the writer's exact grid; the
+    grid constant is part of the cache key, so a copy built under a
+    different _CELLS_BITS (whose cells box_cover would mis-enumerate)
+    is never served."""
 
-                shutil.rmtree(path, ignore_errors=True)
-    if not os.path.exists(meta):
+    def build(tmp: str) -> None:
         li = load_table(spark, sf_dir, "lineitem")
         mx = li.agg(
             F.max("l_partkey").alias("p"), F.max("l_suppkey").alias("s")
@@ -128,12 +112,14 @@ def _zorder_copy(spark, sf_dir: str) -> tuple[str, int, int]:
             .repartition("zbucket")
             .write.mode("overwrite")
             .partitionBy("zbucket")
-            .parquet(path)
+            .parquet(tmp)
         )
-        with open(meta, "w") as f:
-            json.dump({"max_p": mx.p, "max_s": mx.s, "cells_bits": _CELLS_BITS}, f)
-        _prune_stale_tags(_CACHE_ROOT, _source_tag(sf_dir))
-    with open(meta) as f:
+        with open(os.path.join(tmp, "_zorder_meta.json"), "w") as f:
+            json.dump({"max_p": mx.p, "max_s": mx.s}, f)
+
+    key = f"{_source_tag(sf_dir)}-c{_CELLS_BITS}"
+    path = materialize(_CACHE_ROOT, key, build)
+    with open(os.path.join(path, "_zorder_meta.json")) as f:
         m = json.load(f)
     return path, m["max_p"], m["max_s"]
 
@@ -214,29 +200,29 @@ _TARGET_FILES = 4
 
 
 def _compact_dirs(spark, sf_dir):
-    """Build (once per sf) a deliberately fragmented 64-file copy of
-    lineitem, then its 4-file compaction. The compacting write uses
-    repartition(4), NOT coalesce(4): coalesce only caps the count at
-    the SCAN's partition number, which depends on the session's split
-    binning (maxPartitionBytes/openCost × parallelism) — a different
-    driver session could bin the 64 small files into <4 splits and
-    persist a wrong-file-count layout into the cache (review r5).
-    repartition pins the output count at the price of one small
-    shuffle; production compaction of append-only data keeps the
-    no-shuffle coalesce and simply reports the realized count."""
-    tag = _source_tag(sf_dir)
-    frag = os.path.join(_COMPACT_ROOT, tag, "fragmented")
-    comp = os.path.join(_COMPACT_ROOT, tag, "compacted_rp")
-    if not os.path.exists(os.path.join(frag, "_SUCCESS")):
+    """Build (once per source fingerprint) a deliberately fragmented
+    64-file copy of lineitem, then its 4-file compaction. The
+    compacting write uses repartition(4), NOT coalesce(4): coalesce
+    only caps the count at the SCAN's partition number, which depends
+    on the session's split binning (maxPartitionBytes/openCost ×
+    parallelism) — a different driver session could bin the 64 small
+    files into <4 splits and persist a wrong-file-count layout into
+    the cache (review r5). repartition pins the output count at the
+    price of one small shuffle; production compaction of append-only
+    data keeps the no-shuffle coalesce and simply reports the
+    realized count."""
+
+    def build(tmp: str) -> None:
+        frag = os.path.join(tmp, "fragmented")
         load_table(spark, sf_dir, "lineitem").repartition(_FRAG_FILES).write.mode(
             "overwrite"
         ).parquet(frag)
-    if not os.path.exists(os.path.join(comp, "_SUCCESS")):
         spark.read.parquet(frag).repartition(_TARGET_FILES).write.mode(
             "overwrite"
-        ).parquet(comp)
-        _prune_stale_tags(_COMPACT_ROOT, tag)
-    return frag, comp
+        ).parquet(os.path.join(tmp, "compacted_rp"))
+
+    root = materialize(_COMPACT_ROOT, _source_tag(sf_dir), build)
+    return os.path.join(root, "fragmented"), os.path.join(root, "compacted_rp")
 
 
 @query(

@@ -25,14 +25,14 @@ from __future__ import annotations
 
 import hashlib
 import os
-import threading
 
 from pyspark.sql import functions as F
 
 from datafusion_tpc_spark.catalog import (
     load_table,
-    prune_stale_cache_dirs,
     sanitized_sf_tag,
+    session_table,
+    source_fingerprint,
 )
 from datafusion_tpc_spark.functions.literals import values_df
 from datafusion_tpc_spark.functions.shingles import SHINGLES_DUCK
@@ -58,37 +58,35 @@ _CACHE_ROOT = os.path.join(
     ".cache",
     "lsh_served",
 )
-_LSH_LOCK = threading.Lock()
+
+
+def _write_bands(bands, name: str, path: str, mode: str = "overwrite") -> None:
+    (
+        bands.write.mode(mode)
+        .option("path", path)
+        .bucketBy(_SRV_BUCKETS, "bkey")
+        .sortBy("bkey")
+        .saveAsTable(name)
+    )
 
 
 def _lsh_index(spark, sf_dir: str) -> str:
     """Ensure the bucketed band table exists for this source
     fingerprint; return its catalog name. Same once-per-(session, sf,
     fingerprint) build/race/staleness story as operators/bucketing.py
-    (lock around exists-check+build, per-PID dir, per-prefix prune)."""
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
+    (catalog.session_table)."""
+    st = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
     fp = hashlib.md5(
-        f"{st.st_mtime_ns}:{st.st_size}:{_K}:{_BANDS}:{_SRV_BUCKETS}".encode()
+        f"{st}:{_K}:{_BANDS}:{_SRV_BUCKETS}".encode()
     ).hexdigest()[:12]
     tag = sanitized_sf_tag(sf_dir)
     name = f"lsh_bands_{tag}_{fp}"
-    with _LSH_LOCK:
-        if not spark.catalog.tableExists(name):
-            dir_key = f"{tag}_lsh-{fp}-{os.getpid()}"
-            path = os.path.join(_CACHE_ROOT, dir_key, "bands")
-            docs = load_table(spark, sf_dir, "documents").select(
-                "doc_id", "text"
-            )
-            (
-                _band_projection(docs)
-                .write.mode("overwrite")
-                .option("path", path)
-                .bucketBy(_SRV_BUCKETS, "bkey")
-                .sortBy("bkey")
-                .saveAsTable(name)
-            )
-            prune_stale_cache_dirs(_CACHE_ROOT, dir_key)
-    return name
+
+    def build(d: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        _write_bands(_band_projection(docs), name, os.path.join(d, "bands"))
+
+    return session_table(spark, _CACHE_ROOT, name, f"{tag}_lsh-{fp}", build)
 
 
 _LSH_SERVED_ORACLE = f"""
@@ -248,61 +246,29 @@ def _upserted_index(spark, sf_dir: str) -> str:
     batch's band rows APPENDED — Spark's bucketed saveAsTable append
     writes per-bucket files alongside the base set and
     SelectedBucketsCount pruning spans both generations. Same
-    lock/fingerprint/per-PID-dir story as _lsh_index (one lock on
-    purpose: the two indexes share the band computation and a cold
-    start may build both)."""
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
+    fingerprint/per-PID-dir story as _lsh_index; session_table's
+    publish guard drops the base table if the ingest append fails, so
+    a batch-less index is never served (near-dup candidates would
+    silently undercount)."""
+    st = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
     fp = hashlib.md5(
-        f"up:{st.st_mtime_ns}:{st.st_size}:{_K}:{_BANDS}:"
-        f"{_SRV_BUCKETS}:{BATCH_N}".encode()
+        f"up:{st}:{_K}:{_BANDS}:{_SRV_BUCKETS}:{BATCH_N}".encode()
     ).hexdigest()[:12]
     tag = sanitized_sf_tag(sf_dir)
     name = f"lsh_upsert_{tag}_{fp}"
-    with _LSH_LOCK:
-        if not spark.catalog.tableExists(name):
-            dir_key = f"{tag}_lshup-{fp}-{os.getpid()}"
-            path = os.path.join(_CACHE_ROOT, dir_key, "bands")
-            docs = load_table(spark, sf_dir, "documents").select(
-                "doc_id", "text"
-            )
-            base = _band_projection(
-                docs.filter(F.col("doc_id") >= BATCH_N)
-            )
-            (
-                base.write.mode("overwrite")
-                .option("path", path)
-                .bucketBy(_SRV_BUCKETS, "bkey")
-                .sortBy("bkey")
-                .saveAsTable(name)
-            )
-            # the incremental ingest: |batch| x _BANDS rows appended,
-            # bucketed identically — the maintenance cost is the
-            # batch's own minhash, independent of corpus size
-            try:
-                (
-                    _ingest_projection(spark, sf_dir)
-                    .write.mode("append")
-                    .option("path", path)
-                    .bucketBy(_SRV_BUCKETS, "bkey")
-                    .sortBy("bkey")
-                    .saveAsTable(name)
-                )
-            except BaseException:
-                # Two-step publish guard (the decontam_served r15
-                # pattern): the base saveAsTable above has already
-                # registered the table, so a failed ingest append
-                # must not leave the batch-less index servable —
-                # near-dup candidates would silently undercount.
-                # Best-effort DROP (ADVICE r15): if the session/JVM
-                # is the thing that failed, the cleanup itself raises
-                # — the ORIGINAL exception must still propagate.
-                try:
-                    spark.sql(f"DROP TABLE IF EXISTS {name}")
-                except BaseException:
-                    pass
-                raise
-            prune_stale_cache_dirs(_CACHE_ROOT, dir_key)
-    return name
+
+    def build(d: str) -> None:
+        path = os.path.join(d, "bands")
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        _write_bands(
+            _band_projection(docs.filter(F.col("doc_id") >= BATCH_N)), name, path
+        )
+        # the incremental ingest: |batch| x _BANDS rows appended,
+        # bucketed identically — the maintenance cost is the batch's
+        # own minhash, independent of corpus size
+        _write_bands(_ingest_projection(spark, sf_dir), name, path, mode="append")
+
+    return session_table(spark, _CACHE_ROOT, name, f"{tag}_lshup-{fp}", build)
 
 
 @query("q_dedup_lsh_upsert", oracle=_LSH_SERVED_ORACLE)

@@ -37,12 +37,11 @@ map-side-combinable or key-bounded.
 
 from __future__ import annotations
 
-import os
 import threading
 
 from pyspark.sql import Window, functions as F
 
-from datafusion_tpc_spark.catalog import cpu_width
+from datafusion_tpc_spark.catalog import cpu_width, small_table
 from datafusion_tpc_spark.functions.shingles import SHINGLES_DUCK, shingle_table
 from datafusion_tpc_spark.registry import query
 
@@ -209,12 +208,7 @@ def q_dedup_prefix(spark, sf_dir):
     # SortMergeJoin (measured 1.4 s → 4.6 s). Past the gate (huge
     # corpora ⇒ huge vocab) the hint drops and the join correctly
     # shuffles both sides on s.
-    try:
-        docs_small = (
-            os.path.getsize(os.path.join(sf_dir, "documents.parquet")) < 1 << 30
-        )
-    except OSError:
-        docs_small = False
+    docs_small = small_table(sf_dir, "documents")
     vocab = _vocab_sids(sh)
     if docs_small:
         vocab = F.broadcast(vocab)

@@ -38,12 +38,11 @@ the sketch's memory bound is what matters at real vocabulary sizes.
 
 from __future__ import annotations
 
-import os
 
 import pandas as pd
 from pyspark.sql import Window, functions as F
 
-from datafusion_tpc_spark.catalog import cpu_width, load_table
+from datafusion_tpc_spark.catalog import cpu_width, load_table, small_table
 from datafusion_tpc_spark.functions.digest import _h60_duck, h60
 from datafusion_tpc_spark.registry import query
 
@@ -90,11 +89,16 @@ def _mg_partition(batches):
         if counters is None or counters.num_rows == 0:
             merged = batch_tab
         else:
-            merged = (
+            agg = (
                 pa.concat_tables([counters, batch_tab])
                 .group_by("token")
                 .aggregate([("residual", "sum")])
-                .rename_columns(["token", "residual"])
+            )
+            # select by name: aggregate()'s output column order is
+            # pyarrow-version-dependent
+            merged = pa.table(
+                {"token": agg["token"], "residual": agg["residual_sum"]},
+                schema=schema,
             )
         if merged.num_rows > _K:
             top = pc.select_k_unstable(
@@ -154,13 +158,7 @@ def q_agg_freq(spark, sf_dir):
     # the multi-partition merge path is pinned by
     # test_mg_arrow_sketch_candidates_cover_heavy_hitters with its
     # own repartition(4).
-    try:
-        docs_small = (
-            os.path.getsize(os.path.join(sf_dir, "documents.parquet"))
-            < 1 << 30
-        )
-    except OSError:
-        docs_small = False
+    docs_small = small_table(sf_dir, "documents")
     sketch_in = docs.repartition(cpu_width(spark)) if docs_small else docs
     candidates = (
         sketch_in.mapInArrow(_mg_partition, "token string, residual long")

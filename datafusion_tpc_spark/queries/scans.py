@@ -24,10 +24,26 @@ import os
 
 from pyspark.sql import functions as F
 
-from datafusion_tpc_spark.catalog import load_table
+from datafusion_tpc_spark.catalog import load_table, materialize, source_fingerprint
 from datafusion_tpc_spark.registry import query
 
 _CSV_CACHE = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".cache", "csv")
+
+
+def _round_trip(spark, sf_dir, table: str, name: str, write) -> str:
+    """Directory of the format round-trip copy ``name`` of ``table``:
+    ``write(df, dir)`` runs once per (sf_dir, source fingerprint)
+    through catalog.materialize, so a testdata drop re-keys it and
+    concurrent callers never read a half-written copy."""
+    sf_key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+    src = os.path.join(sf_dir, f"{table}.parquet")
+    fp = hashlib.md5(source_fingerprint(src).encode()).hexdigest()[:12]
+    return materialize(
+        _CSV_CACHE,
+        f"{sf_key}_{name}-{fp}",
+        lambda tmp: write(load_table(spark, sf_dir, table), tmp),
+        prune_legacy=True,  # the path-only `<sf_key>/<name>` layout
+    )
 
 
 @query("q_scan_full", oracle="SELECT * FROM lineitem")
@@ -60,13 +76,15 @@ def q_scan_csv(spark, sf_dir):
     Cargo.toml:15). Round-trips `nation` through CSV with an explicit
     schema (no inference — schema inference is a full extra scan at
     scale), so the oracle is the parquet table itself."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    out_dir = os.path.join(_CSV_CACHE, key, "nation")
-    marker = os.path.join(out_dir, "_SUCCESS")
-    if not os.path.exists(marker):
-        load_table(spark, sf_dir, "nation").coalesce(1).write.mode("overwrite").option(
+    out_dir = _round_trip(
+        spark,
+        sf_dir,
+        "nation",
+        "nation",
+        lambda df, d: df.coalesce(1).write.mode("overwrite").option(
             "header", "true"
-        ).csv(out_dir)
+        ).csv(d),
+    )
     return spark.read.schema("n_nationkey int, n_name string, n_regionkey int").option(
         "header", "true"
     ).csv(out_dir)
@@ -77,11 +95,13 @@ def q_scan_json(spark, sf_dir):
     """NDJSON scan — DataFusion 19 NdJsonExec (Tier B, reference
     Cargo.toml:15). Round-trips `region` through newline-delimited
     JSON with an explicit schema."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    out_dir = os.path.join(_CSV_CACHE, key, "region_json")
-    marker = os.path.join(out_dir, "_SUCCESS")
-    if not os.path.exists(marker):
-        load_table(spark, sf_dir, "region").coalesce(1).write.mode("overwrite").json(out_dir)
+    out_dir = _round_trip(
+        spark,
+        sf_dir,
+        "region",
+        "region_json",
+        lambda df, d: df.coalesce(1).write.mode("overwrite").json(d),
+    )
     return spark.read.schema("r_regionkey int, r_name string").json(out_dir)
 
 
@@ -124,26 +144,48 @@ def q_scan_avro(spark, sf_dir):
     DataSource; oracle is the parquet table the bytes came from."""
     from datafusion_tpc_spark.sources import avro_py
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    out_dir = os.path.join(_CSV_CACHE, key, "nation_avro")
-    path = os.path.join(out_dir, "nation.avro")
-    if not os.path.exists(path):
-        os.makedirs(out_dir, exist_ok=True)
-        schema = {
-            "type": "record",
-            "name": "nation",
-            "fields": [
-                {"name": "n_nationkey", "type": "int"},
-                {"name": "n_name", "type": "string"},
-                {"name": "n_regionkey", "type": "int"},
-            ],
-        }
-        rows = [r.asDict() for r in load_table(spark, sf_dir, "nation").collect()]
-        tmp = path + ".tmp"
-        avro_py.write_avro(tmp, schema, rows, rows_per_block=8)
-        os.replace(tmp, path)
+    schema = {
+        "type": "record",
+        "name": "nation",
+        "fields": [
+            {"name": "n_nationkey", "type": "int"},
+            {"name": "n_name", "type": "string"},
+            {"name": "n_regionkey", "type": "int"},
+        ],
+    }
+    out_dir = _round_trip(
+        spark,
+        sf_dir,
+        "nation",
+        "nation_avro",
+        lambda df, d: avro_py.write_avro(
+            os.path.join(d, "nation.avro"),
+            schema,
+            [r.asDict() for r in df.collect()],
+            rows_per_block=8,
+        ),
+    )
     avro_py.register(spark)
-    return spark.read.format("pyavro").load(path)
+    return spark.read.format("pyavro").load(os.path.join(out_dir, "nation.avro"))
+
+
+def _orders_part(spark, sf_dir):
+    """`orders` round-tripped through a hive-style directory layout
+    partitioned on o_orderstatus (shared by q_scan_partitioned and
+    q_scan_dpp)."""
+    from datafusion_tpc_spark.sources.connectors import write_partitioned
+
+    return _round_trip(
+        spark,
+        sf_dir,
+        "orders",
+        "orders_part",
+        lambda df, d: write_partitioned(
+            df.select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"),
+            d,
+            partition_by=["o_orderstatus"],
+        ),
+    )
 
 
 @query(
@@ -164,21 +206,8 @@ def q_scan_partitioned(spark, sf_dir):
     first-order scan optimization: a day-partitioned table answers a
     one-day query by touching 1/365th of the bytes. Oracle is the
     unpartitioned parquet with the same predicate."""
-    from datafusion_tpc_spark.sources.connectors import write_partitioned
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    out_dir = os.path.join(_CSV_CACHE, key, "orders_part")
-    marker = os.path.join(out_dir, "_SUCCESS")
-    if not os.path.exists(marker):
-        write_partitioned(
-            load_table(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
-            ),
-            out_dir,
-            partition_by=["o_orderstatus"],
-        )
     return (
-        spark.read.parquet(out_dir)
+        spark.read.parquet(_orders_part(spark, sf_dir))
         .filter(F.col("o_orderstatus") == "F")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
     )
@@ -190,13 +219,13 @@ def q_scan_orc(spark, sf_dir):
     reader, predicate pushdown, same split-per-stripe parallelism
     story as Parquet). Round-trips `supplier` once; oracle is the
     parquet table the bytes came from."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    out_dir = os.path.join(_CSV_CACHE, key, "supplier_orc")
-    marker = os.path.join(out_dir, "_SUCCESS")
-    if not os.path.exists(marker):
-        load_table(spark, sf_dir, "supplier").coalesce(1).write.mode(
-            "overwrite"
-        ).orc(out_dir)
+    out_dir = _round_trip(
+        spark,
+        sf_dir,
+        "supplier",
+        "supplier_orc",
+        lambda df, d: df.coalesce(1).write.mode("overwrite").orc(d),
+    )
     return spark.read.orc(out_dir)
 
 
@@ -216,15 +245,19 @@ def q_scan_xml(spark, sf_dir):
     rounded on both sides: XML serializes doubles as decimal text, and
     round-tripping through text is only bit-stable to the printed
     precision."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    out_dir = os.path.join(_CSV_CACHE, key, "part_xml")
-    marker = os.path.join(out_dir, "_SUCCESS")
-    if not os.path.exists(marker):
-        load_table(spark, sf_dir, "part").withColumn(
-            "p_retailprice", F.round("p_retailprice", 2)
-        ).coalesce(1).write.mode("overwrite").option("rootTag", "parts").option(
-            "rowTag", "part"
-        ).format("xml").save(out_dir)
+    out_dir = _round_trip(
+        spark,
+        sf_dir,
+        "part",
+        "part_xml",
+        lambda df, d: df.withColumn("p_retailprice", F.round("p_retailprice", 2))
+        .coalesce(1)
+        .write.mode("overwrite")
+        .option("rootTag", "parts")
+        .option("rowTag", "part")
+        .format("xml")
+        .save(d),
+    )
     return (
         spark.read.schema(
             "p_partkey bigint, p_name string, p_brand string, p_type string, "
@@ -264,20 +297,7 @@ def q_scan_dpp(spark, sf_dir):
     a join — at 100 TB it is the difference between scanning one
     day's partitions and scanning the year because the date filter
     lived on the calendar dim."""
-    from datafusion_tpc_spark.sources.connectors import write_partitioned
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    out_dir = os.path.join(_CSV_CACHE, key, "orders_part")
-    marker = os.path.join(out_dir, "_SUCCESS")
-    if not os.path.exists(marker):
-        write_partitioned(
-            load_table(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
-            ),
-            out_dir,
-            partition_by=["o_orderstatus"],
-        )
-    part = spark.read.parquet(out_dir)
+    part = spark.read.parquet(_orders_part(spark, sf_dir))
     # createDataFrame ON PURPOSE (r13): converting this dim to a
     # VALUES LocalRelation kills the DPP demonstration — Catalyst
     # constant-folds the filter INTO the LocalRelation rows, leaving

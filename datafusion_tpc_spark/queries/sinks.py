@@ -12,13 +12,14 @@ tests/test_registry_order.py.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 import uuid
 
 from pyspark.sql import functions as F
 
-from datafusion_tpc_spark.catalog import load_table
+from datafusion_tpc_spark.catalog import load_table, materialize, source_fingerprint
 from datafusion_tpc_spark.registry import query
 
 _SINK_CACHE = os.path.join(
@@ -217,33 +218,26 @@ _EVOLVE_CACHE = os.path.join(
 
 def _evolve_dirs(spark, sf_dir):
     """Two parquet snapshot dirs with DRIFTED schemas (v2 adds a
-    column), built once per sf: the read-side half of schema
-    evolution — q_union_evo covers the DataFrame-level union, this
-    exercises Spark's parquet mergeSchema file-level merge."""
-    import hashlib as _hl
+    column), built once per customer source fingerprint (testdata
+    drops replace files at the same path — review r5): the read-side
+    half of schema evolution — q_union_evo covers the DataFrame-level
+    union, this exercises Spark's parquet mergeSchema file-level
+    merge."""
+    st = source_fingerprint(os.path.join(sf_dir, "customer.parquet"))
+    sf_tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    fp = hashlib.md5(f"{sf_dir}:{st}".encode()).hexdigest()[:12]
 
-    # cache key includes the SOURCE file's (mtime, size) fingerprint:
-    # testdata drops replace files at the same path (FIXTURES.md), and
-    # a _SUCCESS-only check would serve stale snapshots against a
-    # fresh oracle (review r5).
-    src = os.path.join(sf_dir, "customer.parquet")
-    st = os.stat(src)
-    key = _hl.md5(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(_EVOLVE_CACHE, key)
-    v1 = os.path.join(root, "v1")
-    v2 = os.path.join(root, "v2")
-    cust = load_table(spark, sf_dir, "customer")
-    if not os.path.exists(os.path.join(v1, "_SUCCESS")):
+    def build(tmp: str) -> None:
+        cust = load_table(spark, sf_dir, "customer")
         cust.filter(F.col("c_custkey") % 2 == 0).select(
             "c_custkey", "c_name", "c_mktsegment"
-        ).coalesce(1).write.mode("overwrite").parquet(v1)
-    if not os.path.exists(os.path.join(v2, "_SUCCESS")):
+        ).coalesce(1).write.mode("overwrite").parquet(os.path.join(tmp, "v1"))
         cust.filter(F.col("c_custkey") % 2 == 1).select(
             "c_custkey", "c_name", "c_mktsegment", "c_acctbal"
-        ).coalesce(1).write.mode("overwrite").parquet(v2)
-    return root
+        ).coalesce(1).write.mode("overwrite").parquet(os.path.join(tmp, "v2"))
+
+    # prune_legacy: the pre-prefix keys were a bare md5
+    return materialize(_EVOLVE_CACHE, f"{sf_tag}-{fp}", build, prune_legacy=True)
 
 
 @query(

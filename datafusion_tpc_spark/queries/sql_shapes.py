@@ -11,11 +11,10 @@ tests/test_registry_order.py.
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import functions as F
 
-from datafusion_tpc_spark.catalog import load_table, register_tables
+from datafusion_tpc_spark.catalog import load_table, register_tables, small_table
 from datafusion_tpc_spark.registry import query
 
 # Month spine via recursion, then gap-filled per-month order counts —
@@ -368,12 +367,7 @@ def _order_windows(spark, sf_dir):
     # verifiably small; past the gate (big-SF corpora) the hint drops
     # and the join correctly shuffles both sides on the order key
     # (the prefix_join docs_small precedent).
-    try:
-        orders_small = (
-            os.path.getsize(os.path.join(sf_dir, "orders.parquet")) < 1 << 30
-        )
-    except OSError:
-        orders_small = False
+    orders_small = small_table(sf_dir, "orders")
     if orders_small:
         o = F.broadcast(o)
     per_ok = li.groupBy(F.col("l_orderkey").alias("ok")).agg(

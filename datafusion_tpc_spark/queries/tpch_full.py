@@ -51,9 +51,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from datafusion_tpc_spark.catalog import (
+    data_bytes,
     derived_partsupp,
-    derived_partsupp_bytes,
     load_table,
+    partsupp_dir,
     register_tables,
 )
 from datafusion_tpc_spark.registry import query
@@ -193,7 +194,8 @@ def q_tpch_q9(spark, sf_dir):
     )
     p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
     s = load_table(spark, sf_dir, "supplier")
-    ps = derived_partsupp(spark, sf_dir).join(
+    ps_dir = partsupp_dir(spark, sf_dir)
+    ps = spark.read.parquet(ps_dir).join(
         F.broadcast(red_keys),
         F.col("ps_partkey") == red_keys.p_partkey,
         "left_semi",
@@ -205,7 +207,7 @@ def q_tpch_q9(spark, sf_dir):
     # instead of falling back (ADVICE r6); un-hinted, AQE still
     # converts to broadcast at runtime when the actual size fits,
     # else keeps the co-partitioned composite-key shuffle join.
-    if derived_partsupp_bytes(sf_dir) < 256 * 1024 * 1024:
+    if data_bytes(ps_dir) < 256 * 1024 * 1024:
         ps = F.broadcast(ps)
     o = load_table(spark, sf_dir, "orders")
     n = load_table(spark, sf_dir, "nation")

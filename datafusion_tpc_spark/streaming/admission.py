@@ -47,7 +47,6 @@ import hashlib
 import os
 import re
 import shutil
-import threading
 import time
 import uuid
 
@@ -55,9 +54,11 @@ from pyspark.sql import functions as F
 
 from datafusion_tpc_spark.catalog import (
     load_table,
+    materialize,
     pid_alive,
-    prune_stale_cache_dirs,
     sanitized_sf_tag,
+    session_table,
+    source_fingerprint,
 )
 from datafusion_tpc_spark.functions.digest import (
     SPLIT_VAL_LT,
@@ -85,7 +86,6 @@ _CACHE_ROOT = os.path.join(
     ".cache",
     "stream_admission",
 )
-_ADM_LOCK = threading.Lock()
 _SLICE_BOUNDS = (4, 7)  # micro-batches: [0,4), [4,7), [7,BATCH_N)
 
 # run output dirs created by this process — excluded from pruning so
@@ -98,30 +98,25 @@ def _digest_index(spark, sf_dir: str) -> str:
     """Ensure the bucketed (doc_id, h=md5(text)) exact-digest table
     exists for this source fingerprint; return its catalog name. The
     persisted form of q_dedup_incr's corpus digest set (its docstring
-    names exactly this index as the at-scale shape). Same lock/
-    fingerprint/per-PID-dir story as the lsh/decontam indexes."""
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    fp = hashlib.md5(
-        f"{st.st_mtime_ns}:{st.st_size}:{_SRV_BUCKETS}".encode()
-    ).hexdigest()[:12]
+    names exactly this index as the at-scale shape). Same
+    catalog.session_table story as the lsh/decontam indexes."""
+    st = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
+    fp = hashlib.md5(f"{st}:{_SRV_BUCKETS}".encode()).hexdigest()[:12]
     tag = sanitized_sf_tag(sf_dir)
     name = f"adm_digests_{tag}_{fp}"
-    with _ADM_LOCK:
-        if not spark.catalog.tableExists(name):
-            dir_key = f"{tag}_adm-{fp}-{os.getpid()}"
-            path = os.path.join(_CACHE_ROOT, dir_key, "digests")
-            digests = load_table(spark, sf_dir, "documents").select(
-                "doc_id", F.md5("text").alias("h")
-            )
-            (
-                digests.write.mode("overwrite")
-                .option("path", path)
-                .bucketBy(_SRV_BUCKETS, "h")
-                .sortBy("h")
-                .saveAsTable(name)
-            )
-            prune_stale_cache_dirs(_CACHE_ROOT, dir_key)
-    return name
+
+    def build(d: str) -> None:
+        (
+            load_table(spark, sf_dir, "documents")
+            .select("doc_id", F.md5("text").alias("h"))
+            .write.mode("overwrite")
+            .option("path", os.path.join(d, "digests"))
+            .bucketBy(_SRV_BUCKETS, "h")
+            .sortBy("h")
+            .saveAsTable(name)
+        )
+
+    return session_table(spark, _CACHE_ROOT, name, f"{tag}_adm-{fp}", build)
 
 
 def admission_gate(spark, sf_dir: str, batch_df, timings: dict | None = None):
@@ -351,41 +346,31 @@ def _empty_verdicts(spark):
 def _fixture_dir(spark, sf_dir: str) -> str:
     """3-slice replay fixture of the probe docs (doc_id < BATCH_N),
     one parquet file per micro-batch — the late_data.py pattern
-    (fingerprinted dir, _READY marker, atomic publish)."""
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    tag = sanitized_sf_tag(sf_dir)
-    key = f"{tag}_admfix-{st.st_mtime_ns}-{st.st_size}-{BATCH_N}"
-    path = os.path.join(_CACHE_ROOT, key)
-    with _ADM_LOCK:
-        if not os.path.exists(os.path.join(path, "_READY")):
-            import glob as _glob
+    (fingerprinted dir, catalog.materialize publish)."""
+    st = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
+    # ':' is not path-safe for Hadoop; keep the '-' separated key form
+    key = f"{sanitized_sf_tag(sf_dir)}_admfix-{st.replace(':', '-')}-{BATCH_N}"
 
-            docs = (
-                load_table(spark, sf_dir, "documents")
-                .filter(F.col("doc_id") < BATCH_N)
-                .select("doc_id", "text")
+    def build(tmp: str) -> None:
+        import glob as _glob
+
+        docs = (
+            load_table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < BATCH_N)
+            .select("doc_id", "text")
+        )
+        bounds = (0, *_SLICE_BOUNDS, BATCH_N)
+        for j in range(len(bounds) - 1):
+            part = docs.filter(
+                (F.col("doc_id") >= bounds[j]) & (F.col("doc_id") < bounds[j + 1])
             )
-            tmp = path + "." + uuid.uuid4().hex[:8]
-            os.makedirs(tmp)
-            bounds = (0, *_SLICE_BOUNDS, BATCH_N)
-            for j in range(len(bounds) - 1):
-                part = docs.filter(
-                    (F.col("doc_id") >= bounds[j])
-                    & (F.col("doc_id") < bounds[j + 1])
-                )
-                stage = os.path.join(tmp, f"stage{j}")
-                part.coalesce(1).write.mode("overwrite").parquet(stage)
-                src = _glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-                shutil.move(src, os.path.join(tmp, f"{j:02d}.parquet"))
-                shutil.rmtree(stage, ignore_errors=True)
-            with open(os.path.join(tmp, "_READY"), "w") as f:
-                f.write(f"bounds={bounds}\n")
-            try:
-                os.replace(tmp, path)
-            except OSError:  # lost a cross-process race; ours is spare
-                shutil.rmtree(tmp, ignore_errors=True)
-            prune_stale_cache_dirs(_CACHE_ROOT, key)
-    return path
+            stage = os.path.join(tmp, f"stage{j}")
+            part.coalesce(1).write.mode("overwrite").parquet(stage)
+            src = _glob.glob(os.path.join(stage, "part-*.parquet"))[0]
+            shutil.move(src, os.path.join(tmp, f"{j:02d}.parquet"))
+            shutil.rmtree(stage, ignore_errors=True)
+
+    return materialize(_CACHE_ROOT, key, build)
 
 
 def run_admission_stream(spark, sf_dir: str, timings: dict | None = None):

@@ -47,13 +47,18 @@ asserts equals the oracle's analytic count here.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
-import threading
 
 from pyspark.sql import functions as F
 
-from datafusion_tpc_spark.catalog import load_table, prune_stale_cache_dirs
+from datafusion_tpc_spark.catalog import (
+    READY,
+    load_table,
+    materialize,
+    source_fingerprint,
+)
 from datafusion_tpc_spark.functions.digest import _h60_duck, h60
 from datafusion_tpc_spark.registry import query
 from datafusion_tpc_spark.session import configure_runtime
@@ -64,42 +69,28 @@ _CACHE_ROOT = os.path.join(
     ".cache",
     "late_events",
 )
-_FIXTURE_LOCK = threading.Lock()
 
 
 def _fixture_dir(spark, sf_dir: str) -> str:
     """Ensure the 5-file late-replay copy of events exists; returns its
     path. File j = fresh rows of slice j + the late subset of slice
-    j−3 (h60 % 10 == 0). Keyed by the source file's fingerprint (the
-    _evolve_dirs pattern); mtimes ascend so listing order is batch
-    order. Build-race safety is the derived_partsupp recipe (review
-    r7 — the first cut built into a FIXED `path + ".build"` dir, so
-    two concurrent cold-start executions interleaved writes and could
-    publish a _READY dir missing slice files): in-process threads
-    serialize on a lock, and each build goes to a uuid temp dir
-    atomically renamed into place, so a cross-process race loses
-    cleanly (its spare dir is discarded)."""
-    import hashlib
-
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
+    j−3 (h60 % 10 == 0). Keyed by the source fingerprint; mtimes
+    ascend so listing order is batch order. Built through
+    catalog.materialize (review r7 — the first cut built into a FIXED
+    `path + ".build"` dir, so two concurrent cold-start executions
+    interleaved writes and could publish a _READY dir missing slice
+    files); the slice grid is written into the _READY marker."""
+    src = os.path.join(sf_dir, "events.parquet")
     sf_tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    fp = hashlib.md5(f"{st.st_mtime_ns}:{st.st_size}".encode()).hexdigest()[:12]
-    key = f"{sf_tag}-{fp}"
-    path = os.path.join(_CACHE_ROOT, key)
-    done = os.path.join(path, "_READY")
-    if os.path.exists(done):
-        return path
-    with _FIXTURE_LOCK:
-        if os.path.exists(done):
-            return path
-        _build_fixture(spark, sf_dir, st, path)
-        prune_stale_cache_dirs(_CACHE_ROOT, key)
-    return path
+    fp = hashlib.md5(source_fingerprint(src).encode()).hexdigest()[:12]
+    return materialize(
+        _CACHE_ROOT,
+        f"{sf_tag}-{fp}",
+        lambda tmp: _build_fixture(spark, sf_dir, os.stat(src).st_mtime, tmp),
+    )
 
 
-def _build_fixture(spark, sf_dir: str, st, path: str) -> None:
-    import uuid
-
+def _build_fixture(spark, sf_dir: str, mtime: float, tmp: str) -> None:
     e = load_table(spark, sf_dir, "events").select(
         "event_id",
         # this drop ships ts as TIMESTAMP_NTZ; normalize to TIMESTAMP
@@ -128,8 +119,6 @@ def _build_fixture(spark, sf_dir: str, st, path: str) -> None:
         (h60(F.concat(F.lit("late:"), F.col("event_id").cast("string"))) % 10 == 0)
         .alias("late"),
     )
-    tmp = path + "." + uuid.uuid4().hex[:8]
-    os.makedirs(tmp)
     import glob as _glob
 
     for j in range(_SLICES):
@@ -143,13 +132,9 @@ def _build_fixture(spark, sf_dir: str, st, path: str) -> None:
         dst = os.path.join(tmp, f"{j:02d}.parquet")
         shutil.move(src, dst)
         shutil.rmtree(stage, ignore_errors=True)
-        os.utime(dst, (st.st_mtime + j + 1, st.st_mtime + j + 1))
-    with open(os.path.join(tmp, "_READY"), "w") as f:
+        os.utime(dst, (mtime + j + 1, mtime + j + 1))
+    with open(os.path.join(tmp, READY), "w") as f:
         f.write(f"lo={lo} hi={hi} ws={ws}\n")
-    try:
-        os.replace(tmp, path)
-    except OSError:  # lost a cross-process race; ours is spare
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def run_late_stream(spark, sf_dir: str):
@@ -160,7 +145,7 @@ def run_late_stream(spark, sf_dir: str):
 
     configure_runtime(spark)
     path = _fixture_dir(spark, sf_dir)
-    with open(os.path.join(path, "_READY")) as f:
+    with open(os.path.join(path, READY)) as f:
         meta = dict(kv.split("=") for kv in f.read().split())
     ws = int(meta["ws"])
     wsec = max(ws // 8, 1)

@@ -1,0 +1,134 @@
+"""The catalog cache primitives every derived cache and size gate goes
+through: source_fingerprint, data_bytes / small_table (the scale
+gate) and materialize (the shared-cache build path). Filesystem-only
+— no Spark session needed."""
+
+from __future__ import annotations
+
+import os
+import sys
+import threading
+import time
+
+import pytest
+
+from datafusion_tpc_spark.catalog import (
+    READY,
+    SMALL_TABLE_BYTES,
+    data_bytes,
+    materialize,
+    small_table,
+    source_fingerprint,
+)
+
+
+def _write(path: str, nbytes: int) -> None:
+    with open(path, "wb") as f:
+        f.write(b"x" * nbytes)
+
+
+def test_directory_shaped_table_sizes_and_fingerprint(tmp_path):
+    """A `<t>.parquet` that is a DIRECTORY of part files: the walker
+    sums the parts (os.path.getsize reported the inode's 4096 bytes,
+    so every gate took the small branch at any scale), a sparse part
+    past 1 GiB makes the gate answer not-small, a missing table is
+    not-small, and an in-place part rewrite re-keys the fingerprint."""
+    sf = tmp_path / "sf"
+    table = sf / "t.parquet"
+    table.mkdir(parents=True)
+    _write(str(table / "part-00000.parquet"), 1000)
+    _write(str(table / "part-00001.parquet"), 2345)
+    (table / "_SUCCESS").touch()
+    assert data_bytes(str(table)) == 3345
+    assert small_table(str(sf), "t")
+
+    fp_before = source_fingerprint(str(table))
+    part = table / "part-00000.parquet"
+    _write(str(part), 1000)  # same size, rewritten in place
+    st = os.stat(part)
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    assert source_fingerprint(str(table)) != fp_before
+
+    with open(table / "part-00002.parquet", "wb") as f:
+        f.truncate(SMALL_TABLE_BYTES + 1)  # sparse: no real disk used
+    assert data_bytes(str(table)) > SMALL_TABLE_BYTES
+    assert not small_table(str(sf), "t")
+
+    assert not small_table(str(sf), "missing")
+
+    plain = sf / "p.parquet"
+    _write(str(plain), 77)
+    st = os.stat(plain)
+    assert source_fingerprint(str(plain)) == f"{st.st_mtime_ns}:{st.st_size}"
+    assert data_bytes(str(plain)) == 77
+
+
+def _fill(tmp: str) -> None:
+    for i in range(3):
+        _write(os.path.join(tmp, f"part-{i}"), 10)
+
+
+def test_materialize_failed_build_publishes_nothing(tmp_path):
+    root = str(tmp_path)
+
+    def boom(tmp: str) -> None:
+        _write(os.path.join(tmp, "part-0"), 10)
+        raise RuntimeError("build died mid-write")
+
+    with pytest.raises(RuntimeError, match="mid-write"):
+        materialize(root, "tag-fp", boom)
+    assert os.listdir(root) == []  # no published dir, no tmp leftover
+
+    path = materialize(root, "tag-fp", _fill)
+    assert path == os.path.join(root, "tag-fp")
+    assert sorted(os.listdir(path)) == [READY, "part-0", "part-1", "part-2"]
+
+
+def test_materialize_rebuilds_markerless_dir(tmp_path):
+    """A directory at <root>/<key> without the ready marker is an
+    interrupted or legacy build: it is removed and rebuilt, never
+    served."""
+    root = str(tmp_path)
+    stale = tmp_path / "tag-fp"
+    stale.mkdir()
+    _write(str(stale / "part-0"), 3)  # half-written leftover
+    _write(str(stale / "junk"), 3)
+    path = materialize(root, "tag-fp", _fill)
+    assert sorted(os.listdir(path)) == [READY, "part-0", "part-1", "part-2"]
+    assert os.path.getsize(os.path.join(path, "part-0")) == 10
+
+
+def test_materialize_concurrent_cold_builds_once(tmp_path):
+    """More racing threads than cores on a cold key: the key lock makes
+    the marker check + build + publish one critical section, so the
+    build runs exactly once and every caller gets the published dir."""
+    root = str(tmp_path)
+    n = 8
+    calls = []
+
+    def slow(tmp: str) -> None:
+        calls.append(tmp)
+        time.sleep(0.05)
+        _fill(tmp)
+
+    start = threading.Barrier(n)
+    paths = []
+
+    def run():
+        start.wait()
+        paths.append(materialize(root, "tag-fp", slow))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=run) for _ in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(calls) == 1
+    assert paths == [os.path.join(root, "tag-fp")] * n
+    assert os.listdir(root) == ["tag-fp"]

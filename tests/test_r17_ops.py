@@ -52,6 +52,32 @@ def test_table_view_names_owned_by_catalog_only():
     )
 
 
+def test_cache_and_size_primitives_owned_by_catalog_only():
+    """Outside catalog.py no package module may publish a cache by
+    rename, prune one, or size a table with os.path.getsize: derived
+    caches go through catalog.materialize / session_table and size
+    gates through catalog.small_table / data_bytes. Hand-written copies
+    drifted before (about twenty builders, five pasted gates, one of
+    them blind to directory-shaped tables)."""
+    banned = re.compile(
+        r"os\.path\.getsize\(|os\.replace\(|os\.rename\(|prune_stale_cache_dirs\("
+    )
+    offenders: list[str] = []
+    for root, _dirs, files in os.walk(_PKG):
+        for fn in files:
+            if not fn.endswith(".py") or fn == "catalog.py":
+                continue
+            path = os.path.join(root, fn)
+            with open(path) as fh:
+                for i, line in enumerate(fh, 1):
+                    if banned.search(line):
+                        offenders.append(f"{path}:{i}: {line.strip()}")
+    assert not offenders, (
+        "use catalog.materialize / session_table / small_table instead: "
+        f"{offenders}"
+    )
+
+
 def test_bench_emits_marker_min():
     """bench.py must surface the in-run marker (q_dedup_prefix min)
     in its JSON line whenever the marker is in the benched set —
