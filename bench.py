@@ -126,6 +126,34 @@ def run_once(df) -> float:
     return time.perf_counter() - t0
 
 
+def summary(
+    results: dict[str, float], results_min: dict[str, float], sf: float
+) -> dict:
+    """The JSON line bench.py prints, from per-query medians and mins.
+
+    min-of-N rides alongside the median (BASELINE.md protocol note):
+    the median answers "typical run on this machine right now"; the
+    min approximates contention-free capability — a loaded co-tenant
+    inflates the median uniformly but rarely all N mins. When the
+    quiet-window MARKER (q_dedup_prefix, the stable min-channel floor
+    tools/bench_quiet_hunt.sh probes) is in the benched set, its
+    in-run min is carried as ``marker_min`` so a PERF comparison can
+    tell co-tenant contamination from a code regression without
+    external context (VERDICT r16 item 3)."""
+    out = {
+        "metric": "sum_median_sec",
+        "value": round(sum(results.values()), 4),
+        "unit": "sec",
+        "queries": results,
+        "queries_min": results_min,
+        "sum_min_sec": round(sum(results_min.values()), 4),
+        "sf": sf,
+    }
+    if "q_dedup_prefix" in results_min:
+        out["marker_min"] = results_min["q_dedup_prefix"]
+    return out
+
+
 def main() -> None:
     # bench reads go through the layout-optimized table copies
     # (fixtures/optimize.py) — same rows, row groups sized so scans
@@ -195,27 +223,7 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    # min-of-N alongside the median (BASELINE.md protocol note): the
-    # median answers "typical run on this machine right now"; the min
-    # approximates contention-free capability — a loaded co-tenant
-    # inflates the median uniformly but rarely all N mins.
-    out = {
-        "metric": "sum_median_sec",
-        "value": round(sum(results.values()), 4),
-        "unit": "sec",
-        "queries": results,
-        "queries_min": results_min,
-        "sum_min_sec": round(sum(results_min.values()), 4),
-        "sf": sf,
-    }
-    # Ambient-load self-adjudication (VERDICT r16 item 3, additions-
-    # only): carry the quiet-window MARKER's in-run min (q_dedup_prefix,
-    # the stable min-channel floor tools/bench_quiet_hunt.sh probes)
-    # inside the output so a PERF comparison can tell co-tenant
-    # contamination from a code regression without external context.
-    if "q_dedup_prefix" in results_min:
-        out["marker_min"] = results_min["q_dedup_prefix"]
-    print(json.dumps(out))
+    print(json.dumps(summary(results, results_min, sf)))
     spark.stop()
 
 

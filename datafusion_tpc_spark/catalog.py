@@ -181,6 +181,47 @@ def small_table(sf_dir: str, table: str) -> bool:
     return data_bytes(os.path.join(sf_dir, f"{table}.parquet")) < SMALL_TABLE_BYTES
 
 
+def memo_read(spark: SparkSession, src: str, read, *key) -> DataFrame:
+    """The ONE per-session read memo: ``read()`` runs once per
+    (session, src, key, source fingerprint) and later calls return the
+    SAME DataFrame object (no schema inference, no Spark job). ``key``
+    carries whatever else selects the read (e.g. the opt-cache flag).
+    A source that cannot be fingerprinted is read every time. The
+    first concurrent reader's DataFrame wins, so racing callers agree
+    on one object (and register_view never flip-flops between them)."""
+    fp = _source_fingerprint(src)
+    memo_key = (src, *key, fp)
+    if fp is not None:
+        with _MEMO_LOCK:
+            df = _session_store(spark, "_dftpc_table_memo").get(memo_key)
+        if df is not None:
+            return df
+    df = read()
+    if fp is not None:
+        with _MEMO_LOCK:
+            df = _session_store(spark, "_dftpc_table_memo").setdefault(memo_key, df)
+    return df
+
+
+def register_view(spark: SparkSession, name: str, df: DataFrame) -> DataFrame:
+    """The ONE session temp-view registration: createOrReplaceTempView
+    costs ~50 ms of analysis, so ``name`` is re-registered only when
+    the DataFrame under it CHANGED for this session (new sf_dir,
+    flipped opt flag, a testdata swap — memo_read's key covers all
+    three). The check-register-record triple runs under _MEMO_LOCK so
+    the view memo can never disagree with the live temp view under
+    concurrent callers (r16 review: unlocked, two racing registrations
+    could leave the memo pointing at the loser and a later call would
+    skip the healing re-register). Precondition: every view name
+    passed here is registered ONLY through this function."""
+    with _MEMO_LOCK:
+        views = _session_store(spark, "_dftpc_view_memo")
+        if views.get(name) is not df:
+            df.createOrReplaceTempView(name)
+            views[name] = df
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table; normalizes events.ts ns→µs timestamp.
 
@@ -188,34 +229,28 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the layout-optimized copy (fixtures/optimize.py): identical rows,
     row groups sized so scans parallelize across cores.
 
-    Memoized per (session, sf_dir, name, opt-flag, source fingerprint)
-    on the session object itself. configure_runtime still runs on
-    every call (it is the driver-session contract hook, ~3 ms)."""
+    Memoized per (session, source, opt-flag, source fingerprint) by
+    memo_read. configure_runtime still runs on every call (it is the
+    driver-session contract hook, ~3 ms)."""
     configure_runtime(spark)
     src = f"{sf_dir}/{name}.parquet"
     opt = os.environ.get("SPARK_GRAFT_OPT_CACHE") == "1"
-    fp = _source_fingerprint(src)
-    key = (sf_dir, name, opt, fp)
-    if fp is not None:
-        with _MEMO_LOCK:
-            df = _session_store(spark, "_dftpc_table_memo").get(key)
-        if df is not None:
-            return df
-    path = src
-    if opt:
-        from fixtures.optimize import ensure_optimized
 
-        path = ensure_optimized(sf_dir, name)
-    df = spark.read.parquet(path)
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # ns epoch → µs timestamp. Integer DIV, not floor(x/1000):
-        # double division loses precision at 1e18 ns. Truncation
-        # matches DuckDB's TIMESTAMP_NS → TIMESTAMP cast.
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    if fp is not None:
-        with _MEMO_LOCK:
-            _session_store(spark, "_dftpc_table_memo")[key] = df
-    return df
+    def read() -> DataFrame:
+        path = src
+        if opt:
+            from fixtures.optimize import ensure_optimized
+
+            path = ensure_optimized(sf_dir, name)
+        df = spark.read.parquet(path)
+        if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+            # ns epoch → µs timestamp. Integer DIV, not floor(x/1000):
+            # double division loses precision at 1e18 ns. Truncation
+            # matches DuckDB's TIMESTAMP_NS → TIMESTAMP cast.
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+        return df
+
+    return memo_read(spark, src, read, opt)
 
 
 def pid_alive(pid: int) -> bool:
@@ -454,32 +489,16 @@ def partsupp_dir(spark: SparkSession, sf_dir: str) -> str:
 
 
 def derived_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(partsupp_dir(spark, sf_dir))
+    path = partsupp_dir(spark, sf_dir)
+    return memo_read(spark, path, lambda: spark.read.parquet(path))
 
 
 def register_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Register every testdata table as a temp view (in-memory session
     catalog — reference benches/query.rs:35 registers its one table the
-    same way). Returns name → DataFrame.
-
-    createOrReplaceTempView costs ~50 ms/table of analysis, so a view
-    is re-registered only when the memoized DataFrame under that name
-    CHANGED for this session (new sf_dir, flipped opt flag, or a
-    testdata swap — the load_table fingerprint covers all three).
-    The check-register-record triple runs under _MEMO_LOCK so the
-    view memo can never disagree with the live temp view under
-    concurrent callers with different sf_dirs (r16 review: unlocked,
-    two racing registrations could leave the memo pointing at the
-    loser and a later call would skip the healing re-register).
-    Precondition: the ten TABLES view names are owned by this function
-    (nothing else in the repo registers them — audited r16)."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        df = load_table(spark, sf_dir, name)
-        with _MEMO_LOCK:
-            views = _session_store(spark, "_dftpc_view_memo")
-            if views.get(name) is not df:
-                df.createOrReplaceTempView(name)
-                views[name] = df
-        out[name] = df
-    return out
+    same way) through register_view, so a repeat call with the same
+    sf_dir re-registers nothing. Returns name → DataFrame."""
+    return {
+        name: register_view(spark, name, load_table(spark, sf_dir, name))
+        for name in TABLES
+    }

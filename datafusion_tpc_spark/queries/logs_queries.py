@@ -9,9 +9,20 @@ fixture spec FIXTURES.md §1):
 
 The fixture is generated deterministically at import (numpy seed 42,
 fixtures/gen_logs.py) so the DuckDB oracle can read the same parquet
-by absolute path. The AVG query rounds on both sides per the oracle
-conventions; the SQL text the engine executes is otherwise identical
-to the reference's strings.
+by absolute path (gen_logs.logs_path, the one source of it). It is
+written in bounded row groups, so the scan splits across every core
+as the reference's thread-per-core scan does (reference
+src/main.rs:41); the correctness and bench paths read the same file.
+
+Registration mirrors the reference's register-once (benches/
+query.rs:35-40): the read is memoized per session and fingerprint
+(catalog.memo_read) and the `logs` view is re-registered only when
+the DataFrame under it changed (catalog.register_view), so a repeat
+build runs no Spark job.
+
+The AVG query rounds on both sides per the oracle conventions; the
+SQL text the engine executes is otherwise identical to the
+reference's strings.
 
 Scale pinning: the reference's logs dataset is a FIXED dataset (its
 data dirs are hard-coded, reference src/main.rs:28-29) — it does not
@@ -30,6 +41,7 @@ import os
 
 from fixtures.gen_logs import ensure_all, logs_path
 
+from datafusion_tpc_spark.catalog import memo_read, register_view
 from datafusion_tpc_spark.registry import query
 from datafusion_tpc_spark.session import configure_runtime
 
@@ -49,9 +61,9 @@ def _logs(spark, sf_dir):
         sf = os.environ.get("SPARK_GRAFT_LOGS_SF", _CANONICAL_SF)
     else:
         sf = _CANONICAL_SF
-    df = spark.read.parquet(logs_path(sf))
-    df.createOrReplaceTempView("logs")
-    return df
+    path = logs_path(sf)
+    df = memo_read(spark, path, lambda: spark.read.parquet(path))
+    return register_view(spark, "logs", df)
 
 
 @query(

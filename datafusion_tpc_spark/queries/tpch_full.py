@@ -56,6 +56,7 @@ from datafusion_tpc_spark.catalog import (
     load_table,
     partsupp_dir,
     register_tables,
+    register_view,
 )
 from datafusion_tpc_spark.registry import query
 
@@ -86,7 +87,7 @@ def _register_with_partsupp(spark, sf_dir):
     the shared SQL bodies resolve `partsupp` as a table on the Spark
     side exactly as the oracle's CTE does on the DuckDB side."""
     register_tables(spark, sf_dir)
-    derived_partsupp(spark, sf_dir).createOrReplaceTempView("partsupp")
+    register_view(spark, "partsupp", derived_partsupp(spark, sf_dir))
 
 
 _Q2_BODY = """

@@ -4,18 +4,27 @@ inferred from the queries at reference benches/query.rs:24-26
 (service, pod, container, request_method, response_bytes) and
 src/main.rs:48-52 (service, host, request_bytes).
 
-Seed=42, numpy-only (no Spark dependency): generation happens at
-registry import so the DuckDB oracle can read the parquet regardless
-of query/oracle execution order.
+Seed=42, generated with numpy alone (no Spark session): generation
+happens at registry import so the DuckDB oracle can read the parquet
+regardless of query/oracle execution order.
+
+Layout: row groups of fixtures/optimize.ROW_GROUP_ROWS rows, so a
+scan splits across cores on the correctness path and the bench path
+alike (a single-group file scans on one core). The layout is part of
+the file name, so a checkout holding an older single-group
+`logs.parquet` generates the new file instead of keeping the old one.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
+
+from fixtures.optimize import ROW_GROUP_ROWS
 
 _SERVICES = ["auth", "api", "web", "billing", "search", "ingest", "cache", "batch"]
 _CONTAINERS = ["app", "sidecar", "init", "proxy"]
@@ -27,14 +36,22 @@ _ROWS = {"0.001": 10_000, "0.01": 100_000, "0.1": 1_000_000}
 _CACHE_ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".cache", "logs"
 )
+_FILE = f"logs-rg{ROW_GROUP_ROWS}.parquet"
 
 
 def logs_path(sf: str) -> str:
-    return os.path.join(_CACHE_ROOT, f"sf{sf}", "logs.parquet")
+    """The logs fixture of one scale factor — the one source of the
+    path for the Spark side, the oracles and the bench's result check."""
+    return os.path.join(_CACHE_ROOT, f"sf{sf}", _FILE)
 
 
 def generate(sf: str) -> str:
-    """Generate logs for one scale factor (idempotent, seed=42)."""
+    """Generate logs for one scale factor (idempotent, seed=42). The
+    write goes to a uuid temp file renamed into place (two cold
+    processes racing a fixed '.tmp' name would interleave into one
+    corrupt file); the legacy single-group `logs.parquet` and crashed
+    writers' orphan tmp files are then reclaimed by the shared
+    two-phase prune, as in fixtures/optimize.py."""
     path = logs_path(sf)
     if os.path.exists(path):
         return path
@@ -67,10 +84,14 @@ def generate(sf: str) -> str:
             "response_bytes": pa.array(response_bytes),
         }
     )
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
-    pq.write_table(table, tmp)
+    from datafusion_tpc_spark.catalog import prune_stale_cache_dirs
+
+    d = os.path.dirname(path)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f"logs-{uuid.uuid4().hex[:8]}.tmp")
+    pq.write_table(table, tmp, row_group_size=ROW_GROUP_ROWS)
     os.replace(tmp, path)
+    prune_stale_cache_dirs(d, _FILE, extra=("logs.parquet",))
     return path
 
 

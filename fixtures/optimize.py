@@ -11,7 +11,8 @@ we reproduce the fix by rewriting each table with bounded row groups.
 Data is byte-identical row-wise (pyarrow read → write, no reordering),
 so results and oracles are unaffected — only the physical layout
 changes. Used by the bench path (SPARK_GRAFT_OPT_CACHE=1); the
-correctness path reads the raw driver files.
+correctness path reads the raw driver files. ROW_GROUP_ROWS is also
+the layout of the generated logs fixture (fixtures/gen_logs.py).
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ import os
 
 import pyarrow.parquet as pq
 
-_ROW_GROUP_ROWS = 50_000
+ROW_GROUP_ROWS = 50_000
 
 _CACHE_ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".cache", "opt"
@@ -46,11 +47,10 @@ def ensure_optimized(sf_dir: str, table: str) -> str:
     two-phase-marked prune (catalog.prune_stale_cache_dirs)."""
     import uuid
 
-    from datafusion_tpc_spark.catalog import prune_stale_cache_dirs
+    from datafusion_tpc_spark.catalog import prune_stale_cache_dirs, source_fingerprint
 
     src = os.path.join(sf_dir, f"{table}.parquet")
-    st = os.stat(src)
-    fp = hashlib.md5(f"{st.st_mtime_ns}:{st.st_size}".encode()).hexdigest()[:12]
+    fp = hashlib.md5(source_fingerprint(src).encode()).hexdigest()[:12]
     d = optimized_dir(sf_dir)
     out = os.path.join(d, f"{table}-{fp}.parquet")
     if os.path.exists(out):
@@ -58,7 +58,7 @@ def ensure_optimized(sf_dir: str, table: str) -> str:
     os.makedirs(d, exist_ok=True)
     tbl = pq.read_table(src)
     tmp = os.path.join(d, f"{table}-{uuid.uuid4().hex[:8]}.tmp")
-    pq.write_table(tbl, tmp, row_group_size=_ROW_GROUP_ROWS)
+    pq.write_table(tbl, tmp, row_group_size=ROW_GROUP_ROWS)
     os.replace(tmp, out)
     # stale `{table}-*` siblings (old fingerprints, orphan tmps) plus
     # the legacy un-fingerprinted name; other tables' entries in the
