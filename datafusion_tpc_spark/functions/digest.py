@@ -1,8 +1,6 @@
 """Deterministic cross-engine digest family (moved from
 operators/dedup.py in round 5 so query modules can share it without
-importing dedup's query registrations — registry.load_all order is
-the driver-verification window and a transitive import would drag
-dedup's 8 queries into it).
+importing dedup).
 
 h60 is the determinism backbone of the dedup/sampling/packing layer:
 every pseudo-random decision (MinHash permutations, sampling buckets,

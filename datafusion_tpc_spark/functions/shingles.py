@@ -1,8 +1,6 @@
 """Word-3-shingle helpers shared by the near-dup family (moved from
-operators/dedup.py in round 7 so operators/prefix_join.py can window
-independently — registry.load_all order is the driver-verification
-window and a transitive import of dedup would drag its 8 query
-registrations into it; the functions/digest.py precedent).
+operators/dedup.py in round 7 so operators/prefix_join.py can use
+them without importing dedup; the functions/digest.py precedent).
 
 Arrays are 0-based in Spark / 1-based in DuckDB, out-of-range access
 is NULL in both and concat_ws skips NULLs — the expressions line up

@@ -1,7 +1,6 @@
 """Warehouse-audit batch 2 (r6) — cross-table referential-integrity
 reconciliation. Extends operators/audit.py (DQ checks, SCD2, PIT
-join) in its own module so the pinned round-6 driver window (which
-registers audit.py) is untouched (registry.load_all discipline).
+join) in its own module.
 """
 
 from __future__ import annotations

@@ -290,13 +290,10 @@ def q_dedup_minhash(spark, sf_dir):
     return lsh_candidate_pairs(band_table(docs), band_cap=None)
 
 
-# Mega-band cap, snapshotted at import so the registered oracle and
-# the query always agree (r11 graduation: the oracle string is built
-# once at registration; a call-time env read could silently diverge
-# from it). Setting the env var AFTER import has NO effect on the
-# registered query by design — runtime configuration goes through
-# lsh_candidate_pairs(band_cap=...) directly (the pytest path).
-_BAND_CAP = int(os.environ.get("SPARK_GRAFT_LSH_BAND_CAP", "1000"))
+# Mega-band cap, shared by the registered query and its oracle string.
+# Other caps go through lsh_candidate_pairs(band_cap=...) directly
+# (the pytest path).
+_BAND_CAP = 1000
 
 _MINHASH_CAPPED_ORACLE = f"""
     WITH sh AS ({_SHINGLES_DUCK}),
@@ -324,11 +321,10 @@ _MINHASH_CAPPED_ORACLE = f"""
 @query("q_dedup_minhash_capped", oracle=_MINHASH_CAPPED_ORACLE)
 def q_dedup_minhash_capped(spark, sf_dir):
     """q_dedup_minhash with the mega-band guard ON: band keys above
-    _BAND_CAP members (SPARK_GRAFT_LSH_BAND_CAP at import, default
-    1000) are dropped before the self-join. At 100 TB this is the
-    difference between a bounded cap²-per-key join and one
-    boilerplate cluster (a license header shared by 10M docs) going
-    quadratic.
+    _BAND_CAP (1000) members are dropped before the self-join. At
+    100 TB this is the difference between a bounded cap²-per-key join
+    and one boilerplate cluster (a license header shared by 10M docs)
+    going quadratic.
 
     EXACT-oracled since r11 (VERDICT r10 item 4): "approximate by
     contract" never meant nondeterministic — the guard is a

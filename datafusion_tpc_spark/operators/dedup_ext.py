@@ -1,10 +1,8 @@
 """Dedup batch 2 (r6) — INCREMENTAL ingestion dedup: a new document
 batch checked against the existing corpus, the continuous-pipeline
-shape operators/dedup.py's whole-corpus passes don't cover.
-Standalone module (imports no query-registering module) so it can
-enter a driver verification window alone (registry.load_all cascade
-rule); the canonical-text normalization is 3 expressions inlined
-rather than imported from dedup.py for the same reason.
+shape operators/dedup.py's whole-corpus passes don't cover. The
+canonical-text normalization is 3 expressions inlined rather than
+imported from dedup.py.
 """
 
 from __future__ import annotations

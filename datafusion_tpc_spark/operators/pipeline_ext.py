@@ -1,9 +1,5 @@
 """Curation-pipeline batch 2 (r5-born) — bigram LM scoring, inverted
-index, and snapshot diff. Split from operators/pipeline.py in round 6
-so the round-7 driver window can register exactly these three
-never-driver-verified ids without pipeline.py's ten already-green ids
-riding along (registry.load_all window discipline; imports no
-query-registering module).
+index, and snapshot diff. Split from operators/pipeline.py in round 6.
 """
 
 from __future__ import annotations

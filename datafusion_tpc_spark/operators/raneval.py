@@ -35,6 +35,14 @@ from pyspark.sql import Window, functions as F
 from datafusion_tpc_spark.catalog import load_table
 from datafusion_tpc_spark.functions.literals import values_df
 from datafusion_tpc_spark.functions.digest import cosine
+from datafusion_tpc_spark.operators.similarity import (
+    _N_PLANES,
+    _QUERY_VEC_ID,
+    _ann_candidates,
+    _ivf_candidates,
+    _sign_bucket,
+    q_sim_topk,
+)
 from datafusion_tpc_spark.registry import query
 
 _QID = 0  # query vector (q_sim_topk convention)
@@ -274,13 +282,6 @@ def q_sim_anneval(spark, sf_dir):
     arrays, no shuffle); the candidate filter is a 5-row broadcast
     bucket join; the exact side is a TakeOrdered top-10. The eval is
     corpus-linear and runs wherever the index build runs."""
-    from datafusion_tpc_spark.operators.similarity import (  # lazy:
-        _N_PLANES,  # keeps similarity's registrations out of this
-        _QUERY_VEC_ID,  # module's load_all position
-        _ann_candidates,
-        q_sim_topk,
-    )
-
     assert _N_PLANES == _ANN_PLANES and _QUERY_VEC_ID == _QID
     cand = _ann_candidates(spark, sf_dir).select("vec_id").cache()
     try:
@@ -372,12 +373,6 @@ def q_sim_ivfeval(spark, sf_dir):
     100 TB: candidate generation is the broadcast-argmin scan of
     q_sim_ivf (no shuffle of the embedding table); the eval adds two
     count aggregates and a 10-element IN filter."""
-    from datafusion_tpc_spark.operators.similarity import (  # lazy —
-        _QUERY_VEC_ID,  # keeps similarity's registrations out of this
-        _ivf_candidates,  # module's load_all position
-        q_sim_topk,
-    )
-
     assert _QUERY_VEC_ID == _QID
     cand = _ivf_candidates(spark, sf_dir).cache()
     try:
@@ -653,11 +648,6 @@ def q_sim_anneval_batch(spark, sf_dir):
     WindowGroupLimit shape (plan-gated). At 100 TB with a 10k-query
     batch: one scan for buckets, one for the exact legs, k·|batch|
     shuffle rows — the eval runs wherever the index build runs."""
-    from datafusion_tpc_spark.operators.similarity import (  # lazy —
-        _N_PLANES,  # keeps similarity's registrations out of this
-        _sign_bucket,  # module's load_all position
-    )
-
     assert _N_PLANES == _ANN_PLANES
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")

@@ -1,11 +1,7 @@
 """Aggregation extensions — MODE, fixed-width histogram, DECIMAL
 aggregation (SURVEY.md §2.4 extras + the §1 Decimal128 type row).
 
-q_agg_mode / q_agg_hist moved here from aggregates.py in round 5 so
-the driver verification window (registry.load_all order; first 50
-registered queries) can include them without re-registering all 16
-aggregates.py queries: the two were the module's only
-never-driver-verified ids (VERDICT r4 item 1).
+q_agg_mode / q_agg_hist moved here from aggregates.py in round 5.
 
 q_agg_decimal is new in round 5 (VERDICT r4 item 2): the reference's
 dependency surface includes Arrow Decimal128 (reference Cargo.toml:15,

@@ -1,10 +1,7 @@
 """Aggregation batch 2 (r5-born) — bitwise aggregates, conditional
 aggregation, regr_* linear-regression family, histogram equalization,
 A/B test z-statistic, Gini coefficient. Split from
-queries/aggregates.py in round 6 so the round-7 driver window can
-register exactly these six never-driver-verified ids without the 14
-already-green aggregates.py ids riding along (registry.load_all
-window discipline; imports no query-registering module).
+queries/aggregates.py in round 6.
 """
 
 from __future__ import annotations

@@ -1,7 +1,5 @@
 """Array / higher-order lambda function surface (SURVEY §2.8
-extension) — split from scalar_functions so the round-4 driver
-verification window stays at exactly 50 ids (registry.load_all);
-q_fn_array queues for the round-5 rotation."""
+extension) — split from scalar_functions."""
 
 from __future__ import annotations
 

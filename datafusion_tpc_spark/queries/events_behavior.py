@@ -1,11 +1,6 @@
 """Behavioral event analytics — funnel, retention, LOCF gap-fill,
 anomaly, Markov transitions, rollup, top paths, attribution, CUSUM,
-seasonality. Split from queries/events.py in round 6 so the round-7
-driver verification window can register exactly these ten ids (all
-never driver-verified after r6) without re-registering events.py's
-six already-green ids — the aggregates_ext precedent
-(registry.load_all window discipline; window modules must not import
-query-registering modules, and this module imports none).
+seasonality. Split from queries/events.py in round 6.
 """
 
 from __future__ import annotations

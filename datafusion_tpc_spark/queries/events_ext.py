@@ -1,8 +1,6 @@
 """Event-analytics extensions, round 6 — gaps-and-islands (user
 activity streaks). Companion to queries/events.py (funnel, retention,
-LOCF, CUSUM, …), in its own module so the r6 registrations queue
-behind the driver window without touching events.py's order
-(registry.load_all discipline).
+LOCF, CUSUM, …), in its own module.
 """
 
 from __future__ import annotations

@@ -1,7 +1,5 @@
 """Scalar-function batch 2 (r5-born) — URL parsing surface. Split
-from queries/scalar_functions.py in round 6 for the round-7 driver
-window (registry.load_all discipline; imports no query-registering
-module).
+from queries/scalar_functions.py in round 6.
 """
 
 from __future__ import annotations

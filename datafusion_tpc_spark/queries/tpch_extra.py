@@ -5,8 +5,6 @@ the remaining classics whose column sets exist in the driver testdata
 Q2/Q12/Q19 et al; Q4/Q21's late predicate is adapted — see their
 docstrings). Reference parity target: the reference is a TPC-flavored
 engine (src/main.rs:28-29 `tpc-1`).
-
-In the round-5 driver verification window (registry.load_all).
 """
 
 from __future__ import annotations

@@ -14,9 +14,7 @@ different rule than Q4's EXISTS), common-equi-key extraction from a
 disjunction of conjunctions (Q19), and NOT EXISTS anti join under a
 scalar-subquery threshold (Q22).
 
-Registered after the round-5 driver window (registry.load_all) —
-queue for the r6 staleness rotation; exact oracles pytest-verified
-meanwhile (tests/test_queries_oracle.py).
+Exact oracles are pytest-verified (tests/test_queries_oracle.py).
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """UDF-surface batch 2 (r5-born) — the mapInArrow raw-Arrow path.
-Split from queries/udfs.py in round 6 for the round-7 driver window
-(registry.load_all discipline; imports no query-registering module).
+Split from queries/udfs.py in round 6.
 """
 
 from __future__ import annotations

@@ -1,9 +1,6 @@
 """Window-function batch 2 (r5-born) — gap sessionization, EMA via
 recursive window algebra, rolling distinct count. Split from
-queries/windows.py in round 6 so the round-7 driver window can
-register exactly these three never-driver-verified ids without the
-five already-green windows.py ids riding along (registry.load_all
-window discipline; imports no query-registering module).
+queries/windows.py in round 6.
 """
 
 from __future__ import annotations

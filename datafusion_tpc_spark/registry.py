@@ -17,6 +17,8 @@ Conventions (SURVEY.md §5, FIXTURES.md):
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 from collections.abc import Callable
 from typing import Any
 
@@ -48,16 +50,8 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
-# The round-17 driver window: the driver verifies exactly these 50
-# query ids, in this order (forcing computation via tools/edf_check.py;
-# contents pinned by tests/test_registry_order.py, staleness audited
-# by test_window_staleness).
+# The external driver verifies exactly these query ids, in this order.
 DRIVER_WINDOW: tuple[str, ...] = (
-    # The 50 anchor-r11 ids EXACTLY (re-derived at the r17 rotation
-    # from CORRECTNESS_r01-r16 + _BIRTH_ROUND: the EDF-chosen 50 ==
-    # the r16 pre-staged list, no seat changed anchors). ZERO free
-    # slots, ZERO births. edf_check post-rotation: forced 0, feasible
-    # through r24.
     "q_agg_cms",
     "q_agg_hll",
     "q_dedup_prefix",
@@ -110,34 +104,6 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "q_text_readability",
 )
 
-# PRE-STAGED R18 PLAN (recompute with tools/edf_check.py at rotation —
-# assumes the r17 window verifies green; computed at the r17 rotation
-# with the r17 window simulated as verified, post-r17 anchors
-# 12:50 13:53 14:53 15:50 16:50 17:50): r18 window = the 50 anchor-r12
-# ids EXACTLY (deadline r19 — EDF schedules the oldest block
-# proactively; exactly 50 after r16's winsorize_td pull-forward),
-# ZERO free slots, ZERO births. The anchor-r12 50 (recomputed from
-# CORRECTNESS_r01-r16 at the r17 rotation; re-derive at the r18
-# rotation in case r17 seats change anchors): q_agg_dp q_agg_freq
-# q_agg_kmv q_cte_recursive q_dedup_minhash_capped q_dedup_spans
-# q_dedup_substr q_fn_binary q_fn_interval q_fn_variant q_join_bloom
-# q_join_bucketed q_join_fuzzy q_join_lateral q_join_nullsafe
-# q_join_overlap q_join_overlap_banded q_layout_compact
-# q_layout_zorder q_pipe_bpe q_pipe_classify q_pipe_ipf
-# q_pipe_mixture q_pipe_pack q_pipe_sample_weighted q_profile
-# q_scan_corrupt q_scan_evolve q_scan_meta q_sim_ivf_served
-# q_sim_ivf_served_batch q_sink_avro q_text_compress q_text_kl
-# q_text_ttr q_text_zipf q_tpch_q11 q_tpch_q12 q_tpch_q13 q_tpch_q15
-# q_tpch_q16 q_tpch_q17 q_tpch_q19 q_tpch_q2 q_tpch_q20 q_tpch_q22
-# q_tpch_q8 q_tpch_q9 q_union_evo q_unpivot. SCHEDULE THROUGH r21:
-# remaining blocks r13:53 r14:53 r15:50 r16:50 against 50-slot
-# windows — r19 takes anchor-r13 (53: includes the r13
-# never-verified seats q_dedup_decontam_served,
-# q_dedup_decontam_served_batch, q_dedup_lsh_upsert — 3 spill to the
-# r19 forced set per edf_check), r20 takes anchor-r14 (53: includes
-# the r14 never-verified seats q_sim_ivf_upsert,
-# q_dedup_decontam_upsert, q_stream_admission), r21 takes anchor-r15.
-# Keep r18 births at ZERO. Give any NEW query a _BIRTH_ROUND pin.
 
 def _promote_window(window: tuple[str, ...]) -> None:
     """Reorder QUERIES in place so `window` occupies the first
@@ -156,169 +122,11 @@ def _promote_window(window: tuple[str, ...]) -> None:
 
 
 def load_all() -> None:
-    """Import every query module, then pin the driver window.
-
-    The external driver verifies the FIRST 50 queries in QUERIES dict
-    insertion order. Through round 11 the window was controlled by
-    module IMPORT order, which forced module-granularity rotations
-    (and module splits like diagnostics_ext whenever one query from a
-    large module needed a slot). Since round 12 the window is an
-    EXPLICIT per-query list (``DRIVER_WINDOW``, below): load_all
-    imports every module (order now only a readability concern),
-    then reorders QUERIES so the window ids occupy slots 1-50.
-    Everything else queues behind in stable import order.
-
-    ROUND-12 FORCING COMPUTATION (recomputed from the committed
-    CORRECTNESS_r01-r11 artifacts + _BIRTH_ROUND, cap 5 at inventory
-    295): post-r11 anchor distribution is r6:44, r7:43, r8:50, r9:50,
-    r10:50, r11:58. Forced into r12 (anchor <= 12-6 = r6): exactly
-    the 44 anchor-r6 greens (tpch_full 6, tpch_more 6, sql_shapes 8,
-    typefns 4, sinks 4, sketches 8, sampling 4, layout 2, bloom 1,
-    bucketing 1). The 6 free slots go to new-oracle evidence
-    (VERDICT r11 item 2), NOT the unforced anchor-r7 fillers: the two
-    rows-only -> EXACT oracle graduations never driver-hashed
-    (q_pipe_pack — recursive-CTE fold, chunking.py; and
-    q_dedup_minhash_capped — COUNT() OVER cap, dedup.py) plus four
-    r11 births led by the round's flagship claims (q_sim_ivf_served,
-    q_sim_ivf_served_batch — the materialized-index serving path;
-    q_dedup_substr, q_dedup_spans — the span-dedup family).
-
-    FORWARD EDF FEASIBILITY (checked by simulation,
-    tools/edf_check.py): r13 = the 43 anchor-r7 greens (all forced)
-    + 7 free; r14/r15/r16 = the anchor-r8/r9/r10 blocks (50 each);
-    the remaining r11/r12 births (deadline r17/r18) absorb the
-    slack. Every deadline met.
-
-    tests/test_registry_order.py pins the window contents so silent
-    shifts fail loudly, and test_window_staleness re-runs the
-    forcing computation every session.
-    """
-    # Module imports (grouped by the round whose window they last
-    # occupied — order below no longer controls the driver window,
-    # DRIVER_WINDOW does; it only fixes the below-window tail order).
-    from datafusion_tpc_spark.queries import events_ext  # noqa: F401
-    from datafusion_tpc_spark.operators import (  # noqa: F401
-        prefix_join,
-        splits,
-        pq,
-    )
-    from datafusion_tpc_spark.queries import diagnostics  # noqa: F401
-    from datafusion_tpc_spark.operators import sketches_ext  # noqa: F401
-    from datafusion_tpc_spark.queries import forecast  # noqa: F401
-    from datafusion_tpc_spark.operators import semdedup, batching, cdc, mmr  # noqa: F401
-    from datafusion_tpc_spark.operators import similarity  # noqa: F401
-    from datafusion_tpc_spark.operators import raneval  # noqa: F401
-    from datafusion_tpc_spark.queries import readability  # noqa: F401
-    from datafusion_tpc_spark.operators import quantization, retrieval  # noqa: F401
-    from datafusion_tpc_spark.operators import audit  # noqa: F401
-
-    # anchor-r6 modules (all 44 queries in the r12 window):
-    from datafusion_tpc_spark.queries import (  # noqa: F401
-        tpch_full,
-        tpch_more,
-        sql_shapes,
-        typefns,
-        sinks,
-    )
-    from datafusion_tpc_spark.operators import (  # noqa: F401
-        sketches,
-        sampling,
-        layout,
-        bloom,
-        bucketing,
-    )
-    from datafusion_tpc_spark.queries import scalar_ext, udfs_ext, geo  # noqa: F401
-    from datafusion_tpc_spark.operators import skyline, kmeans  # noqa: F401
-    from datafusion_tpc_spark.queries import sinks_ext  # noqa: F401
-    # r13-bound: remaining anchor-r7 modules (deadline r13):
-    from datafusion_tpc_spark.queries import (  # noqa: F401
-        events_behavior,
-        aggregates_more,
-        windows_ext,
-    )
-    from datafusion_tpc_spark.operators import pipeline_ext  # noqa: F401
-    from datafusion_tpc_spark.streaming import (  # noqa: F401
-        stream_enrich,
-        py_source,
-        py_sink,
-        merge,
-        stream_quantile,
-    )
-    from datafusion_tpc_spark.operators import (  # noqa: F401
-        multimodal,
-        graph,
-    )
-    # r11 birth (deadline r17) + r14 birth (deadline r20:
-    # q_sim_ivf_upsert, the persisted-codebook maintenance leg): the
-    # IVF materialized-assignment serving twin (VERDICT r10 item 3):
-    from datafusion_tpc_spark.operators import ivf_served  # noqa: F401
-
-    # r12 birth (deadline r18): the LSH band-index serving twin —
-    # near-dup admission control from a bucketed materialized index:
-    from datafusion_tpc_spark.operators import lsh_served  # noqa: F401
-
-    # r13 birth (deadline r19 under cap 6) + r14 birth (deadline r20:
-    # q_dedup_decontam_upsert, the merge-on-ingest maintenance leg):
-    # the decontamination
-    # serving twin — eval-integrity admission control from the
-    # bucketed train-span-hash index, completing the serving trilogy
-    # (ivf_served / lsh_served / decontam_served):
-    from datafusion_tpc_spark.operators import decontam_served  # noqa: F401
-    # r14 birth (deadline r20): the streaming admission-gate capstone
-    # composing all three serving indexes per micro-batch (exact /
-    # near-dup / contamination tiers, EXACT-oracled):
-    from datafusion_tpc_spark.streaming import admission  # noqa: F401
-    # r11 birth (deadline r17): PSI distribution-drift audit (lives
-    # outside queries/diagnostics.py because that module is in the
-    # r11 window and window modules must not grow mid-round):
-    from datafusion_tpc_spark.queries import diagnostics_ext  # noqa: F401
-    # r8-window modules, re-verified green in round 8 (deadline r14):
-    from datafusion_tpc_spark.queries import (  # noqa: F401
-        aggregates,
-        logs_queries,
-    )
-    from datafusion_tpc_spark.operators import (  # noqa: F401
-        dedup,  # NOTE: pipeline imports dedup — dedup must precede it
-        pipeline,
-    )
-    from datafusion_tpc_spark.queries import stats_ext  # noqa: F401
-    from datafusion_tpc_spark.operators import (  # noqa: F401
-        curation,
-        audit_ext,
-        dedup_ext,
-    )
-    from datafusion_tpc_spark.queries import sinks_dpo  # noqa: F401
-    # r9-window modules, re-verified green in round 9 (deadline r15):
-    from datafusion_tpc_spark.queries import (  # noqa: F401
-        events,
-        joins,
-        scalar_functions,
-    )
-    from datafusion_tpc_spark.streaming import stream_queries  # noqa: F401
-    from datafusion_tpc_spark.queries import (  # noqa: F401
-        tpch,
-        udfs,
-        windows,
-    )
-    from datafusion_tpc_spark.streaming import late_data  # noqa: F401
-    # r10-window modules, re-verified green in round 10 (freshest —
-    # deadline r16 under cap 5):
-    from datafusion_tpc_spark.queries import (  # noqa: F401
-        sorts,
-        setops,
-        arrays,
-        tpch_extra,
-        scans,
-        predicates,
-        subqueries,
-    )
-    from datafusion_tpc_spark.streaming import stream_sink  # noqa: F401
-    from datafusion_tpc_spark.operators import (  # noqa: F401
-        asof,
-        chunking,
-        text,
-    )
-    from datafusion_tpc_spark.queries import aggregates_ext  # noqa: F401
-
-    # Pin the driver window (slots 1-50) — see DRIVER_WINDOW above.
+    """Import every module of the ``queries``, ``operators`` and
+    ``streaming`` subpackages (each registers its queries on import),
+    then pin the driver window to the first 50 slots. Idempotent."""
+    for sub in ("queries", "operators", "streaming"):
+        pkg = importlib.import_module(f"{__package__}.{sub}")
+        for mod in pkgutil.iter_modules(pkg.__path__):
+            importlib.import_module(f"{pkg.__name__}.{mod.name}")
     _promote_window(DRIVER_WINDOW)

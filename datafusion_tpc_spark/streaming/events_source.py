@@ -1,8 +1,6 @@
-"""Streaming events source — the ts-unit-probing readStream shared by
-stream_queries.py and stream_sink.py (moved out of stream_queries in
-round 5 so stream_sink can import it without dragging stream_queries'
-7 query registrations ahead of q_stream_sink in the driver
-verification window — registry.load_all order).
+"""Streaming events source — the ts-unit-probing readStream and the
+availableNow drain shared by the streaming query modules. It registers
+no queries.
 
 The footer probe is the round-4 fix for the recurring testdata quirk:
 events.ts has shipped as BOTH int64-ns and timestamp[µs] across driver

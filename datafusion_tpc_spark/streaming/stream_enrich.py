@@ -1,12 +1,7 @@
 """Stream-static enrichment + stream-stream LEFT OUTER interval join.
-Split from streaming/stream_queries.py in round 6: q_stream_enrich's
-r5 rows-only→exact-oracle upgrade has never been driver-verified and
-q_stream_join_outer has no driver row at all — this module lets the
-round-7 window register exactly these two without the six
-already-verified † stream_queries ids riding along. Shared helpers
+Split from streaming/stream_queries.py in round 6. Shared helpers
 (the ts-unit-probing streaming source and the availableNow drain)
-live in events_source.py, which registers nothing — the window
-cascade rule (registry.load_all).
+live in events_source.py.
 """
 
 from __future__ import annotations

@@ -2,10 +2,8 @@
 the batch t-digest (queries/stats_ext.py::q_agg_tdigest): per
 event-type centroid state maintained across micro-batches with
 applyInPandasWithState, quantiles read off the cumulative-weight
-curve at every trigger. The centroid compressor is reimplemented
-here (15 lines) rather than imported from stats_ext: this module is
-a round-7 verification-window candidate and window modules must not
-import query-registering modules (registry.load_all cascade rule).
+curve at every trigger. The centroid compressor is a 15-line
+reimplementation of stats_ext's.
 
 Rows-only (†): centroid boundaries depend on batch splits;
 tests/test_streaming.py pins the final estimates' rank error against

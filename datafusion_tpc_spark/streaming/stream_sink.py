@@ -3,10 +3,6 @@ extension (SURVEY §2.10/§7-M4; the reference has NO sink at all —
 its object-store put is todo!(), reference
 src/object_store/file.rs:215-228).
 
-Own module imported after the pinned round-4 verification window
-(registry.load_all); queues for the round-5 rotation, exact-oracled
-via pytest meanwhile.
-
 Scale notes: the parquet sink + checkpoint directory is the
 production streaming pattern — exactly-once via the sink's
 transaction log (_spark_metadata) and the checkpoint's WAL/offsets.

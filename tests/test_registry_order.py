@@ -1,40 +1,25 @@
-"""Registration-order invariants (ADVICE r2, registry.py).
+"""Registry invariants.
 
-The external driver verifies queries in dict-insertion order with a
-bounded window (50 rows in rounds 1-4). load_all() deliberately points
-that window at the modules changed this round — but nothing enforced
-the ordering, so a query added to an earlier-imported module silently
-shifted the window. This pins the window contents: adding/moving a
-query now fails HERE, prompting a deliberate re-point instead of a
-silent coverage hole.
-
-Round 5 adds test_window_staleness (VERDICT r4 item 6): the rotation
-discipline itself is now a failing test — a registered query whose
-last driver CORRECTNESS row is too many rounds old must be in the
-current window, or this test fails. That turns the manual "remember
-to rotate" process cost into an automatic one.
+The external driver verifies the first 50 queries in QUERIES dict
+insertion order; load_all() pins those slots to registry.DRIVER_WINDOW.
+test_driver_window_contents pins the window independently, so a
+silent edit to DRIVER_WINDOW fails here. The other tests check that
+module discovery registers every declared query, that each query has
+a callable and oracles only registered names, and that the driver
+canonicalizer lint rejects hazardous output schemas.
 """
 
 from __future__ import annotations
 
 import glob
-import json
 import os
-import re
 
 from datafusion_tpc_spark import registry
 
 registry.load_all()
 
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-# The round-17 driver window (VERDICT r16 item 7): the 50 anchor-r11
-# ids EXACTLY (re-derived at the r17 rotation from CORRECTNESS_r01-r16
-# + _BIRTH_ROUND: the EDF-chosen 50 == the r16 pre-staged list, no
-# seat changed anchors). ZERO free slots, ZERO births this round.
-# Post-rotation edf_check: forced 0, feasible through r24. Pinned
-# INDEPENDENTLY of registry.DRIVER_WINDOW on purpose: a silent edit
-# there must fail here, prompting a deliberate re-point.
+# The driver window, pinned INDEPENDENTLY of registry.DRIVER_WINDOW
+# on purpose: a silent edit there must fail here.
 EXPECTED_WINDOW_50 = [
     "q_agg_cms",
     "q_agg_hll",
@@ -99,239 +84,19 @@ def test_every_query_has_callable_and_oracle_subset():
     assert set(registry.ORACLE) <= set(registry.QUERIES)
 
 
-def _correctness_history():
-    """(current_round, {query_id: last round with a driver row}) from
-    the committed CORRECTNESS_r*.json artifacts. current_round is the
-    round being built (max committed + 1)."""
-    last_seen: dict[str, int] = {}
-    max_round = 0
-    for path in glob.glob(os.path.join(_REPO_ROOT, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnum = int(m.group(1))
-        max_round = max(max_round, rnum)
+def test_load_all_discovers_every_module():
+    """Discovery misses no module or subpackage: every ``@query(``
+    decorator in the package is registered, and a second load_all()
+    is a no-op."""
+    pkg = os.path.dirname(registry.__file__)
+    decorators = 0
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
         with open(path) as f:
-            rows = json.load(f)
-        for qid in rows:
-            last_seen[qid] = max(last_seen.get(qid, 0), rnum)
-    return max_round + 1, last_seen
-
-
-# The driver verifies 50 queries per round, and a query outside the
-# window may go at most _MAX_STALE_ROUNDS rounds since its anchor
-# (last CORRECTNESS row, or birth) — i.e. each query consumes one
-# window slot at least every _MAX_STALE_ROUNDS+1 rounds, so the
-# schedulable inventory capacity is 50 * (_MAX_STALE_ROUNDS + 1).
-# Keep the cap at the MINIMAL value whose capacity covers the
-# registry: tighter is unschedulable (a greedy earliest-deadline
-# simulation of rounds 8-17 at the r7 inventory of 268 shows cap 4
-# forcing 68 ids into round 12's 50-slot window), looser weakens the
-# rotation discipline for no reason. At ≤250 queries this evaluates
-# to the historical cap of 4; at 268 it is 5.
-_MAX_STALE_ROUNDS = max(4, -(-(len(registry.QUERIES) - 50) // 50))
-
-# Round each query was ADDED, for queries never yet driver-verified
-# (their staleness counts from birth, not from a CORRECTNESS row —
-# a brand-new query may queue behind the window for up to
-# _MAX_STALE_ROUNDS rounds, same budget as a green one goes without
-# re-verification). Queries absent here AND absent from every
-# CORRECTNESS artifact default to round 1 — i.e. maximally stale.
-_BIRTH_ROUND = {
-    "q_agg_decimal": 5,
-    "q_tpch_q21": 5,
-    "q_tpch_q8": 5,
-    "q_tpch_q13": 5,
-    "q_tpch_q15": 5,
-    "q_tpch_q17": 5,
-    "q_tpch_q19": 5,
-    "q_tpch_q22": 5,
-    "q_fn_interval": 5,
-    "q_fn_binary": 5,
-    "q_profile": 5,
-    "q_stream_pysource": 5,
-    "q_join_bucketed": 5,
-    "q_stream_pysink": 5,
-    "q_fn_variant": 5,
-    "q_cte_recursive": 5,
-    "q_join_lateral": 5,
-    "q_win_sessionize": 5,
-    "q_agg_bitwise": 5,
-    "q_pipe_lm": 5,
-    "q_join_nullsafe": 5,
-    "q_tpch_q2": 5,
-    "q_tpch_q9": 5,
-    "q_tpch_q11": 5,
-    "q_tpch_q12": 5,
-    "q_tpch_q16": 5,
-    "q_tpch_q20": 5,
-    "q_agg_freq": 5,
-    "q_evt_funnel": 5,
-    "q_graph_pagerank": 5,
-    "q_layout_zorder": 5,
-    "q_stream_merge": 5,
-    "q_pipe_bpe": 5,
-    "q_union_evo": 5,
-    "q_evt_retention": 5,
-    "q_text_index": 5,
-    "q_pipe_classify": 5,
-    "q_pipe_diff": 5,
-    "q_sink_avro": 5,
-    "q_unpivot": 5,
-    "q_evt_locf": 5,
-    "q_stream_join_outer": 5,
-    "q_join_fuzzy": 5,
-    "q_agg_condagg": 5,
-    "q_evt_anomaly": 5,
-    "q_fn_url": 5,
-    "q_scan_corrupt": 5,
-    "q_agg_regr": 5,
-    "q_evt_markov": 5,
-    "q_text_zipf": 5,
-    "q_join_overlap": 5,
-    "q_dq_checks": 5,
-    "q_scd2": 5,
-    "q_pipe_sample_weighted": 5,
-    "q_join_bloom": 5,
-    "q_skyline": 5,
-    "q_evt_rollup": 5,
-    "q_win_ema": 5,
-    "q_agg_histeq": 5,
-    "q_agg_abtest": 5,
-    "q_win_rolling_distinct": 5,
-    "q_evt_paths": 5,
-    "q_pipe_mixture": 5,
-    "q_geo_nearest": 5,
-    "q_scan_meta": 5,
-    "q_mm_dedup": 5,
-    "q_layout_compact": 5,
-    "q_udf_arrow": 5,
-    "q_evt_attrib": 5,
-    "q_sim_centroid": 5,
-    "q_sim_kmeans": 5,
-    "q_agg_kmv": 5,
-    "q_text_kl": 5,
-    "q_pipe_ipf": 5,
-    "q_scan_evolve": 5,
-    "q_agg_gini": 5,
-    "q_join_pit": 5,
-    "q_agg_dp": 5,
-    "q_text_compress": 5,
-    "q_evt_cusum": 5,
-    "q_evt_seasonality": 5,
-    "q_text_ttr": 5,
-    "q_join_overlap_banded": 5,
-    "q_sim_rrf": 6,
-    "q_sim_hardneg": 6,
-    "q_sim_pca": 6,
-    "q_pipe_forget": 6,
-    "q_pipe_bpe_train": 6,
-    "q_evt_islands": 6,
-    "q_agg_corrmat": 6,
-    "q_agg_tdigest": 6,
-    "q_agg_winsorize": 6,
-    "q_evt_rfm": 6,
-    "q_pipe_curriculum": 6,
-    "q_sink_json": 6,
-    "q_graph_triangles": 6,
-    "q_agg_entropy": 6,
-    "q_dq_reconcile": 6,
-    "q_pipe_shard": 6,
-    "q_stream_quantile": 6,
-    "q_agg_bootstrap": 6,
-    "q_agg_theta": 6,
-    "q_graph_bfs": 6,
-    "q_dedup_incr": 6,
-    "q_win_ratio": 6,
-    "q_evt_interarrival": 6,
-    "q_dedup_prefix": 7,
-    "q_pipe_split_content": 7,
-    "q_pipe_budget": 7,
-    "q_sim_pq": 7,
-    "q_dq_skew": 7,
-    "q_dq_drift": 7,
-    "q_stream_late": 7,
-    "q_agg_hll": 7,
-    "q_agg_cms": 7,
-    "q_dq_kanon": 7,
-    "q_pipe_near_split": 7,
-    "q_evt_holt": 7,
-    "q_sink_dpo": 7,
-    "q_pipe_temperature": 7,
-    "q_dedup_semantic": 7,
-    "q_pipe_domain_cap": 7,
-    "q_dq_prcurve": 7,
-    "q_pipe_lenbucket": 7,
-    "q_pipe_cdc": 7,
-    "q_dq_ldiv": 7,
-    "q_sim_mmr": 7,
-    "q_dq_benford": 7,
-    "q_sim_ndcg": 7,
-    "q_dq_calibration": 7,
-    "q_evt_autocorr": 7,
-    "q_dq_tclose": 7,
-    "q_dq_chi2": 7,
-    "q_text_readability": 7,
-    "q_evt_backtest": 7,
-    "q_dedup_eval": 7,
-    "q_sim_anneval": 8,
-    "q_sim_ivfeval": 8,
-    "q_sim_sq8": 8,
-    "q_sim_pqadc": 8,
-    "q_evt_survival": 8,
-    "q_sim_batch": 8,
-    "q_sim_ndcg_batch": 10,
-    "q_sim_anneval_batch": 10,
-    "q_sim_ivf_batch": 10,
-    "q_sim_ivfeval_batch": 10,
-    "q_sim_ivf_sweep": 10,
-    "q_sim_ivf_served": 11,
-    "q_sim_ivf_served_batch": 11,
-    "q_dedup_substr": 11,
-    "q_dedup_spans": 11,
-    "q_dedup_decontam": 11,
-    "q_dq_psi": 11,
-    "q_dedup_winnow": 11,
-    "q_dedup_winnow_pairs": 11,
-    "q_dedup_winnow_contain": 12,
-    "q_agg_winsorize_td": 12,
-    "q_dedup_substr_maximal": 12,
-    "q_dedup_lsh_served": 12,
-    "q_dedup_lsh_served_batch": 12,
-    "q_dedup_decontam_served": 13,
-    "q_dedup_decontam_served_batch": 13,
-    "q_dedup_lsh_upsert": 13,
-    "q_sim_ivf_upsert": 14,
-    "q_dedup_decontam_upsert": 14,
-    "q_stream_admission": 14,
-}
-
-
-def test_window_staleness():
-    """No registered query may go more than _MAX_STALE_ROUNDS rounds
-    without driver verification unless it is scheduled in the CURRENT
-    driver window (first 50 registrations). Staleness counts from the
-    last CORRECTNESS row, or from the query's birth round if it has
-    never had one. This is the automated form of the rotation
-    discipline that let 17 round-4 queries accumulate without driver
-    evidence (VERDICT r4)."""
-    current_round, last_seen = _correctness_history()
-    assert last_seen, "no CORRECTNESS_r*.json committed — cannot audit staleness"
-    window = set(list(registry.QUERIES)[:50])
-
-    def staleness(qid: str) -> int:
-        anchor = last_seen.get(qid) or _BIRTH_ROUND.get(qid, 1)
-        return current_round - anchor
-
-    violations = {
-        qid: f"{staleness(qid)} rounds" + ("" if qid in last_seen else " (never verified)")
-        for qid in registry.QUERIES
-        if qid not in window and staleness(qid) > _MAX_STALE_ROUNDS
-    }
-    assert not violations, (
-        f"queries too stale and not in the current driver window "
-        f"(rotate registry.load_all): {violations}"
-    )
+            decorators += sum(1 for line in f if line.lstrip().startswith("@query("))
+    assert len(registry.QUERIES) == decorators
+    before = list(registry.QUERIES)
+    registry.load_all()
+    assert list(registry.QUERIES) == before
 
 
 def test_canonicalizer_lint_rejects_hazardous_schemas():

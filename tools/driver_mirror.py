@@ -5,7 +5,7 @@ SPARK_GRAFT_MIRROR_ONLY=name1,name2 restricts the t2 loop to those
 queries (incremental rehearsal while iterating); the full default run
 remains the pre-round gate of record."""
 import os, sys, math, datetime as dt
-sys.path.insert(0, '/root/repo')
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 import duckdb
 
