@@ -493,12 +493,15 @@ def derived_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return memo_read(spark, path, lambda: spark.read.parquet(path))
 
 
-def register_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view (in-memory session
-    catalog — reference benches/query.rs:35 registers its one table the
-    same way) through register_view, so a repeat call with the same
-    sf_dir re-registers nothing. Returns name → DataFrame."""
+def register_tables(
+    spark: SparkSession, sf_dir: str, *names: str
+) -> dict[str, DataFrame]:
+    """Register the named testdata tables (all TABLES when none are
+    named) as temp views (in-memory session catalog — reference
+    benches/query.rs:35 registers its one table the same way) through
+    register_view, so a repeat call with the same sf_dir re-registers
+    nothing. Returns name → DataFrame."""
     return {
         name: register_view(spark, name, load_table(spark, sf_dir, name))
-        for name in TABLES
+        for name in names or TABLES
     }

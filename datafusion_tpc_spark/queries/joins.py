@@ -9,8 +9,13 @@ scale demands it:
 - dimension tables (region/nation/supplier ≤ MBs even at 100 TB fact
   scale) are explicitly broadcast() — the CollectLeft analog — so
   fact-table joins never shuffle the fact side on the dim key;
-- fact⋈fact equi-joins (orders⋈lineitem) stay shuffle joins keyed on
-  the join key, with AQE skew-split enabled in the session;
+- fact⋈fact equi-joins (orders⋈lineitem) are left to the planner's
+  size-only estimates, where a join of joins counts as the product
+  of its sides — so the written order picks the plan. Fact-first
+  (q_join_inner) broadcasts the filtered orders and streams
+  lineitem; dimension-first (q_tpch_q5) broadcasts all of lineitem
+  at every shipped sf. Past the threshold both shuffle on orderkey
+  with AQE skew-split;
 - non-equi joins are BroadcastNestedLoopJoin — kept to dimension-sized
   inputs by construction, which is the only shape that survives scale.
 """
@@ -19,43 +24,29 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from datafusion_tpc_spark.catalog import load_table
+from datafusion_tpc_spark.catalog import load_table, register_tables
 from datafusion_tpc_spark.registry import query
 
 
-@query(
-    "q_join_inner",
-    oracle="""
+_JOIN_INNER_SQL = """
     SELECT c.c_mktsegment,
            CAST(COUNT(*) AS BIGINT) AS n_lineitems,
            ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 6) AS revenue
-    FROM customer c
-    JOIN orders o    ON c.c_custkey = o.o_custkey
-    JOIN lineitem l  ON o.o_orderkey = l.l_orderkey
+    FROM lineitem l
+    JOIN orders o   ON o.o_orderkey = l.l_orderkey
+    JOIN customer c ON c.c_custkey = o.o_custkey
     WHERE o.o_orderstatus = 'F'
     GROUP BY c.c_mktsegment
-    """,
-)
+"""
+
+
+@query("q_join_inner", oracle=_JOIN_INNER_SQL)
 def q_join_inner(spark, sf_dir):
-    """Inner equi-join chain customer⋈orders⋈lineitem + aggregation —
-    the partitioned HashJoin path (DF: HashJoinExec Partitioned; Spark:
-    sort-merge/shuffled-hash with AQE). Join keys are the natural
-    partitioning — one shuffle per key change, filter pushed below the
-    join."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "inner")
-        .join(li, o.o_orderkey == li.l_orderkey, "inner")
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_lineitems"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 6).alias(
-                "revenue"
-            ),
-        )
-    )
+    """Inner equi-join chain lineitem⋈orders⋈customer + aggregation,
+    fact-first so lineitem streams (module docstring); identical SQL
+    text runs on both engines."""
+    register_tables(spark, sf_dir, "lineitem", "orders", "customer")
+    return spark.sql(_JOIN_INNER_SQL)
 
 
 @query(
@@ -317,8 +308,10 @@ def q_tpch_q3(spark, sf_dir):
 )
 def q_tpch_q5(spark, sf_dir):
     """TPC-H Q5 shape (local supplier volume): 6-table join with the
-    classic s_nationkey = c_nationkey cycle condition. Dims broadcast;
-    the only shuffles are fact⋈fact and the final group-by."""
+    classic s_nationkey = c_nationkey cycle condition. Dims broadcast
+    explicitly; written dimension-first, so by size-only estimates
+    orders and all of lineitem are broadcast too at every shipped sf
+    and the only shuffle is the final group-by (module docstring)."""
     r = load_table(spark, sf_dir, "region").filter(F.col("r_name").isin("AMERICA", "ASIA"))
     n = load_table(spark, sf_dir, "nation")
     c = load_table(spark, sf_dir, "customer")

@@ -150,10 +150,11 @@ def q_tpch_q4(spark, sf_dir):
     LEFT SEMI join with a composite condition (key equality + date
     range), not a plain semi-join on the key.
 
-    Scale: the 9-month o_orderdate filter prunes the orders scan
-    before the shuffle; the semi-join shuffles both sides on orderkey
-    once and the residual is evaluated within co-partitioned matches —
-    no second pass, no distinct materialization."""
+    Scale: the 9-month o_orderdate filter prunes the orders scan and
+    the residual is evaluated within each key's matches. A semi-join
+    builds its right side, and by size-only estimates the projected
+    lineitem fits the broadcast threshold at every shipped sf, so all
+    of lineitem is broadcast; past it, both sides shuffle on orderkey."""
     o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-10-01").cast("timestamp"))
@@ -225,10 +226,11 @@ def q_tpch_q6(spark, sf_dir):
 def q_tpch_q18(spark, sf_dir):
     """TPC-H Q18 (large-volume customers): the self-aggregation +
     semi-join shape — lineitem aggregated by order, HAVING-filtered,
-    then semi-joined back to prune orders before the main join. The
-    aggregate and the semi-join share the l_orderkey/o_orderkey
-    partitioning, so the big tables meet co-keyed; only qualifying
-    orders (a tiny fraction) reach the customer join."""
+    then semi-joined back to prune orders before the main join; only
+    qualifying orders (a tiny fraction) reach the customer join. By
+    size-only estimates lineitem (twice) and customer are broadcast at
+    every shipped sf; past the threshold the aggregate and the joins
+    meet co-keyed on orderkey."""
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")

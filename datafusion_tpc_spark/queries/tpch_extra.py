@@ -182,10 +182,12 @@ def q_tpch_q21(spark, sf_dir):
 
     Scale: the late set is built once and reused for both the base
     rows and the anti side (self-anti-join of a filtered derived
-    table, NOT a second scan); all three join legs shuffle co-keyed
-    on l_orderkey, so the semi and anti evaluate within already
-    co-partitioned matches; supplier and nation broadcast; the final
-    agg is |suppliers| rows into a top-100 TakeOrdered."""
+    table, NOT a second scan); supplier and nation broadcast; the
+    final agg is |suppliers| rows into a top-100 TakeOrdered. By
+    size-only estimates the projected lineitem, the late set and
+    orders are broadcast too at sf0.01 and sf0.1 (AQE plans no
+    broadcast at sf0.001); past the threshold the three legs shuffle
+    co-keyed on l_orderkey."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )

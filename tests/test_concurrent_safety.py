@@ -9,6 +9,7 @@ or a pytest+mirror overlap). These tests run the overlap on purpose.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 from concurrent.futures import ThreadPoolExecutor
 
@@ -20,6 +21,12 @@ registry.load_all()
 
 def _rows(df):
     return sorted(map(tuple, df.collect()))
+
+
+def _tmp_dirs(entries):
+    """catalog.materialize build dirs (``<key>.<8 hex digits>``) among
+    a cache root's entries; a published or pruned cache leaves none."""
+    return [e for e in entries if re.fullmatch(r".+\.[0-9a-f]{8}", e)]
 
 
 def test_sink_dpo_concurrent(spark):
@@ -127,11 +134,12 @@ def test_bucketed_sibling_tables_not_superseded(spark):
 
 def test_ivf_index_concurrent_cold(spark):
     """(r11) Two threads racing the IVF materialized-index build from
-    a cold cache: the lock + uuid-temp + atomic-rename discipline must
-    publish exactly one index (no interleaved partial writes), both
-    served results must be identical, and no tmp-<uuid> build dir may
-    survive (the orphan sweep covers crashes; a clean race must not
-    leak at all)."""
+    a cold cache: catalog.materialize (per-key lock, ``<key>.<uuid>``
+    build dir, atomic rename) must publish exactly one index (no
+    interleaved partial writes), both served results must be
+    identical, and no ``<key>.<uuid>`` build dir may survive (the
+    two-phase prune covers crashes; a clean race must not leak at
+    all)."""
     from datafusion_tpc_spark.operators import ivf_served
 
     shutil.rmtree(ivf_served._CACHE_ROOT, ignore_errors=True)
@@ -140,17 +148,17 @@ def test_ivf_index_concurrent_cold(spark):
         a, b = list(pool.map(lambda _: _rows(fn(spark, SF_DIR)), range(2)))
     assert a == b and len(a) == 20
     entries = os.listdir(ivf_served._CACHE_ROOT)
+    assert not _tmp_dirs(entries), entries
     assert len([e for e in entries if not e.endswith(".superseded")]) == 1
-    assert not [e for e in entries if e.startswith("tmp-")]
 
 
 def test_lsh_index_concurrent_cold(spark):
     """(r12) Two threads racing the LSH band-index build from a cold
-    cache: _LSH_LOCK serializes the exists-check+build, so exactly
-    one bucketed table is written (saveAsTable is NOT atomic across
-    processes — in-process threads must never double-build one
-    name), both served results must be identical, and the catalog
-    entry must survive for reuse."""
+    cache: catalog.session_table's per-name lock serializes the
+    tableExists check and the build, so exactly one bucketed table is
+    written (saveAsTable is NOT atomic across processes — in-process
+    threads must never double-build one name), both served results
+    must be identical, and the catalog entry must survive for reuse."""
     from datafusion_tpc_spark.operators import lsh_served
 
     # cold: drop the catalog entry and the data dir (session-scoped
@@ -177,10 +185,10 @@ def test_lsh_index_concurrent_cold(spark):
 
 def test_decontam_index_concurrent_cold(spark):
     """(r13) Two threads racing the train-span index build from a
-    cold cache: _DCS_LOCK serializes the exists-check+build (the
-    lsh_served precedent — saveAsTable is not atomic), both served
-    results must be identical, and the catalog entry must survive
-    for reuse."""
+    cold cache: catalog.session_table's per-name lock serializes the
+    tableExists check and the build (saveAsTable is not atomic), both
+    served results must be identical, and the catalog entry must
+    survive for reuse."""
     from datafusion_tpc_spark.operators import decontam_served
 
     # Derive the table name from the operator's own helper (ADVICE
@@ -199,10 +207,11 @@ def test_decontam_index_concurrent_cold(spark):
 
 def test_ivf_upsert_concurrent_cold(spark):
     """(r14) Two threads racing the UPSERTED IVF index build from a
-    cold cache: _upserted_ivf_index takes _IDX_LOCK only AFTER
-    _ivf_index released it (threading.Lock is non-reentrant — nesting
-    would deadlock), so the race must publish exactly two entries
-    (full + upserted), identical served results, no tmp leak."""
+    cold cache: _upserted_ivf_index calls catalog.materialize for its
+    own key only after _ivf_index's materialize call returned (each
+    key has its own lock, so the two builds never nest), so the race
+    must publish exactly two entries (full + upserted), identical
+    served results, no ``<key>.<uuid>`` build dir left."""
     from datafusion_tpc_spark.operators import ivf_served
 
     shutil.rmtree(ivf_served._CACHE_ROOT, ignore_errors=True)
@@ -211,16 +220,17 @@ def test_ivf_upsert_concurrent_cold(spark):
         a, b = list(pool.map(lambda _: _rows(fn(spark, SF_DIR)), range(2)))
     assert a == b and len(a) == 20
     entries = os.listdir(ivf_served._CACHE_ROOT)
+    assert not _tmp_dirs(entries), entries
     assert len([e for e in entries if not e.endswith(".superseded")]) == 2
-    assert not [e for e in entries if e.startswith("tmp-")]
 
 
 def test_decontam_upsert_concurrent_cold(spark):
     """(r14) Two threads racing the MERGED span-index build from a
-    cold cache: _DCS_LOCK serializes base-build + merge-append (a
-    concurrent interleave could append the batch twice and break the
-    DISTINCT-h invariant), both served results identical, no
-    duplicate h, catalog entry survives."""
+    cold cache: catalog.session_table's per-name lock serializes the
+    base write + merge-append of the upserted table (a concurrent
+    interleave could append the batch twice and break the DISTINCT-h
+    invariant), both served results identical, no duplicate h,
+    catalog entry survives."""
     from datafusion_tpc_spark.operators import decontam_served
 
     fn = registry.QUERIES["q_dedup_decontam_upsert"]

@@ -4,7 +4,8 @@ shape fails CI, not just a benchmark.
 
 Checked per claim:
 - projection + predicate pushdown reach the Parquet scan,
-- dimension joins broadcast (no shuffle of the fact side),
+- dimension joins broadcast (no shuffle of the fact side), and the
+  fact side of q_join_inner is never the one broadcast,
 - grouped aggregation is two-phase (partial before the exchange),
 - top-k compiles to TakeOrderedAndProject (never a global sort),
 - no accidental CartesianProduct outside the declared cross join,
@@ -31,6 +32,33 @@ def _plan(spark, name: str) -> str:
     return buf.getvalue()
 
 
+def _walk(node):
+    """Every node of a physical plan (a py4j SparkPlan), depth-first,
+    through the AQE wrappers that hide their subtree from children()."""
+    yield node
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        kids = [node.executedPlan()]
+    elif name.endswith("QueryStage"):
+        kids = [node.plan()]
+    elif name == "ReusedExchange":
+        kids = [node.child()]
+    else:
+        seq = node.children()
+        kids = [seq.apply(i) for i in range(seq.size())]
+    for kid in kids:
+        yield from _walk(kid)
+
+
+def _scan_paths(node) -> list[str]:
+    """Root paths of every Parquet scan at or below ``node``."""
+    return [
+        str(n.relation().location().rootPaths())
+        for n in _walk(node)
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+    ]
+
+
 def test_filter_and_projection_push_into_scan(spark):
     plan = _plan(spark, "q_filter_proj")
     assert "PushedFilters: [IsNotNull(l_returnflag), EqualTo(l_returnflag,R)]" in plan
@@ -50,6 +78,18 @@ def test_dimension_joins_broadcast(spark):
         1 for l in plan.splitlines() if l.strip().startswith("(") and ") Exchange" in l
     )
     assert n_exchanges == 1, f"expected 1 shuffle, plan has {n_exchanges}"
+    # q_join_inner streams lineitem: it is scanned, but under no
+    # broadcast (the fact side must never be collected to the driver)
+    df = registry.QUERIES["q_join_inner"](spark, SF_DIR)
+    root = df._jdf.queryExecution().executedPlan()
+    assert any("lineitem" in p for p in _scan_paths(root))
+    broadcast = [
+        p
+        for n in _walk(root)
+        if n.nodeName() == "BroadcastExchange"
+        for p in _scan_paths(n)
+    ]
+    assert broadcast and not [p for p in broadcast if "lineitem" in p], broadcast
 
 
 def test_aggregation_is_two_phase(spark):

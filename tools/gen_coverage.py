@@ -4,9 +4,11 @@ checked line by line against the implementation."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from datafusion_tpc_spark import registry  # noqa: E402
 
@@ -105,7 +107,7 @@ def main() -> None:
         "(VERDICT r10 item 4 — engine internals, not convention):\n\n"
         f"{audit}\n"
     )
-    with open("/root/repo/COVERAGE.md", "w") as f:
+    with open(os.path.join(ROOT, "COVERAGE.md"), "w") as f:
         f.write(HEADER + body + footer)
     print(f"COVERAGE.md: {len(registry.QUERIES)} queries, {n_exact} exact")
 
