@@ -9,20 +9,24 @@ strided L=32/S=16 windows of the WHOLE corpus on every run to answer
 "how contaminated is each test doc". The production question at eval
 time is the point form: "is THIS benchmark/eval document leaked into
 the train split, and how much?" — asked per incoming doc, long after
-the train corpus was indexed. So materialize the train side ONCE —
-the DISTINCT h60 of every train-split window, one 8-byte hash per
-row, written `bucketBy(N, h)` — and serve each probe as: window THIS
-doc in-engine (one pushed-down point read), collect its bounded
-per-hash counts, and read only the index buckets those hashes land in
-(`SelectedBucketsCount` pruned — plan-gated). Zero corpus windowing
-lineage in the serving plan.
+the train corpus was indexed. So materialize the train side ONCE per
+source fingerprint — the DISTINCT h60 of every train-split window,
+one 8-byte hash per row, in a parquet directory partitioned on
+``p = pmod(h, _SRV_BUCKETS)`` (catalog.materialize, shared by every
+process and published atomically) — and serve each probe as: window
+THIS doc in-engine (one pushed-down point read), collect its bounded
+per-hash counts, and read only the index partitions those hashes land
+in (``p IN (...)`` PartitionFilters plus the pushed ``h IN (...)`` —
+plan-gated). A session reads the index once (catalog.memo_read, with
+an explicit schema so no inference job runs) and registers it as a
+temp view. Zero corpus windowing lineage in the serving plan.
 
 At 100 TB: the index is ≤ |train chars|/S distinct 8-byte hashes —
 payload text never enters it — and each probe costs one local window
-pass + a pruned bucket read bounded by the PROBE's window count, not
-the corpus size. This is how eval-set decontamination actually runs
-as admission control (the GPT-3/PaLM n-gram overlap check, served),
-and composes with q_dedup_lsh_served (near-dup tier) and
+pass + a partition-pruned read bounded by the PROBE's window count,
+not the corpus size. This is how eval-set decontamination actually
+runs as admission control (the GPT-3/PaLM n-gram overlap check,
+served), and composes with q_dedup_lsh_served (near-dup tier) and
 q_dedup_incr (exact tier) into the full ingest gate.
 """
 
@@ -30,13 +34,16 @@ from __future__ import annotations
 
 import hashlib
 import os
+from collections import Counter
 
 from pyspark.sql import functions as F
 
 from datafusion_tpc_spark.catalog import (
     load_table,
+    materialize,
+    memo_read,
+    register_view,
     sanitized_sf_tag,
-    session_table,
     source_fingerprint,
 )
 from datafusion_tpc_spark.functions.digest import (
@@ -63,10 +70,11 @@ from datafusion_tpc_spark.operators.dedup import (  # noqa: E402
 
 PROBE_DOC = 0  # test-split (bucket 98) at sf0.001/0.01/0.1, with
                # 7/8/≥1 windows — short enough that its distinct-hash
-               # IN-list prunes buckets even on the tiny fixture
+               # IN-list prunes partitions even on the tiny fixture
 BATCH_LT = 40  # batched probe set: test-split docs with doc_id <
                # BATCH_LT — [0, 9, 17] at every shipped sf
-_SRV_BUCKETS = 16
+_SRV_BUCKETS = 16  # index partitions: p = pmod(h, _SRV_BUCKETS)
+_SPAN_SCHEMA = "h long, p int"
 _CACHE_ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
     ".cache",
@@ -74,20 +82,48 @@ _CACHE_ROOT = os.path.join(
 )
 
 
-def _write_spans(hashes, name: str, path: str, mode: str = "overwrite") -> None:
-    (
-        hashes.write.mode(mode)
-        .option("path", path)
-        .bucketBy(_SRV_BUCKETS, "h")
-        .sortBy("h")
-        .saveAsTable(name)
+def _train_hashes(docs):
+    """DISTINCT window hashes of the train-split docs in ``docs``."""
+    return (
+        docs.filter(split_bucket() < SPLIT_TRAIN_LT)
+        .select(F.explode(F.expr(_WIN_EXPR)).alias("s"))
+        .select(h60(F.col("s")).alias("h"))
+        .distinct()
     )
+
+
+def _write_spans(hashes, path: str) -> None:
+    """Write DISTINCT span hashes in the served layout: one parquet
+    file per ``p = pmod(h, _SRV_BUCKETS)`` partition, h-sorted."""
+    (
+        hashes.withColumn("p", F.expr(f"pmod(h, {_SRV_BUCKETS})").cast("int"))
+        .repartition(_SRV_BUCKETS, "p")
+        .sortWithinPartitions("p", "h")
+        .write.mode("overwrite")
+        .partitionBy("p")
+        .parquet(path)
+    )
+
+
+def _read_spans(spark, path: str):
+    """The session's one read of a published span directory."""
+    return memo_read(
+        spark, path, lambda: spark.read.schema(_SPAN_SCHEMA).parquet(path)
+    )
+
+
+def _point_read(idx, hs):
+    """Rows of span index ``idx`` whose h is in ``hs``, read from only
+    the partitions those hashes land in (h60 is non-negative, so
+    Python's ``%`` is Spark's pmod)."""
+    ps = sorted({h % _SRV_BUCKETS for h in hs})
+    return idx.filter(F.col("p").isin(ps) & F.col("h").isin(hs))
 
 
 def _index_fingerprint(sf_dir: str) -> str:
     """Source+recipe fingerprint for the train-span index. Exposed as
-    a helper (ADVICE r13) so tests targeting the catalog table derive
-    its name from HERE instead of re-deriving the recipe inline — a
+    a helper (ADVICE r13) so tests targeting the index derive its
+    name from HERE instead of re-deriving the recipe inline — a
     recipe change must not silently retarget them at a stale name."""
     st = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
     return hashlib.md5(
@@ -101,54 +137,52 @@ def _index_table_name(sf_dir: str) -> str:
 
 
 def _train_span_index(spark, sf_dir: str) -> str:
-    """Ensure the bucketed train-span-hash table exists for this
-    source fingerprint; return its catalog name. Same once-per-
-    (session, sf, fingerprint) build/race/staleness story as
-    operators/lsh_served.py (catalog.session_table)."""
+    """Ensure the partitioned train-span-hash index is published for
+    this source fingerprint and registered as this session's temp
+    view; return the view name. The directory is built once by
+    whichever process gets there first (catalog.materialize); later
+    processes and sessions only read it."""
     fp = _index_fingerprint(sf_dir)
-    tag = sanitized_sf_tag(sf_dir)
-    name = f"train_spans_{tag}_{fp}"
 
     def build(d: str) -> None:
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        train_h = (
-            docs.filter(split_bucket() < SPLIT_TRAIN_LT)
-            .select(F.explode(F.expr(_WIN_EXPR)).alias("s"))
-            .select(h60(F.col("s")).alias("h"))
-            .distinct()
-        )
-        _write_spans(train_h, name, os.path.join(d, "spans"))
+        _write_spans(_train_hashes(load_table(spark, sf_dir, "documents")), d)
 
-    return session_table(spark, _CACHE_ROOT, name, f"{tag}_dcs-{fp}", build)
+    path = materialize(_CACHE_ROOT, f"{sanitized_sf_tag(sf_dir)}_dcs-{fp}", build)
+    name = _index_table_name(sf_dir)
+    register_view(spark, name, _read_spans(spark, path))
+    return name
 
 
 def _probe_hash_counts(spark, sf_dir, pred):
-    """Collect the bounded (doc_id, h, cnt) window-hash counts of the
-    probe docs selected by ``pred`` — one pushed-down read of
-    documents, window+hash in the scan projection, ≤ |probe chars|/S
-    rows collected (the ivf_served/lsh_served bounded-probe-list
-    precedent). Only TEST-split docs qualify (the batch audit's
-    bucket >= SPLIT_VAL_LT convention)."""
-    return (
+    """The bounded (doc_id, h, cnt) window-hash counts of the probe
+    docs selected by ``pred``: one pushed-down read of documents,
+    window+hash in the scan projection, ≤ |probe chars|/S window rows
+    collected (the ivf_served/lsh_served bounded-probe-list
+    precedent) and counted on the driver — one Spark job, no shuffle.
+    Only TEST-split docs qualify (the batch audit's bucket >=
+    SPLIT_VAL_LT convention)."""
+    wins = (
         load_table(spark, sf_dir, "documents")
         .filter(pred)
         .filter(split_bucket() >= SPLIT_VAL_LT)
         .select("doc_id", F.explode(F.expr(_WIN_EXPR)).alias("s"))
         .select("doc_id", h60(F.col("s")).alias("h"))
-        .groupBy("doc_id", "h")
-        .agg(F.count(F.lit(1)).alias("cnt"))
         .collect()
     )
+    counts = Counter((r["doc_id"], r["h"]) for r in wins)
+    return [
+        {"doc_id": d, "h": h, "cnt": c} for (d, h), c in sorted(counts.items())
+    ]
 
 
 def _served(spark, sf_dir, pred, index_name: str | None = None):
     """Shared serving plan: probe hash counts (bounded collect) →
-    one bucket-pruned index read filtered to the probes' distinct
+    one partition-pruned index read filtered to the probes' distinct
     hashes → broadcast probe-count join → per-doc contamination
     rollup. Probe docs with zero contaminated windows still get a
     row (n_contam 0) via the literal base frame — the index join
     only ever ADDS counts. ``index_name`` parameterizes WHICH
-    train-span table serves (default: the materialize-once index;
+    train-span view serves (default: the materialize-once index;
     q_dedup_decontam_upsert passes the incrementally maintained one
     — the two differ in maintenance, never in the read)."""
     rows = _probe_hash_counts(spark, sf_dir, pred)
@@ -176,7 +210,7 @@ def _served(spark, sf_dir, pred, index_name: str | None = None):
     )
     idx = spark.table(index_name or _train_span_index(spark, sf_dir))
     contam = (
-        idx.filter(F.col("h").isin(hs))  # bucket-pruning literal
+        _point_read(idx, hs)
         .join(F.broadcast(probe_df), "h")
         .groupBy("doc_id")
         .agg(F.sum("cnt").alias("nc"))
@@ -231,8 +265,8 @@ def q_dedup_decontam_served(spark, sf_dir):
     MATERIALIZED train-span index: window the probe doc in-engine
     from a pushed-down point read of documents, collect its bounded
     per-hash counts (≤ |probe chars|/{_SUB_S} rows), and read the
-    bucketed DISTINCT-train-hash table pruned to the buckets those
-    hashes land in (`SelectedBucketsCount` ≤ |probe hashes| of
+    partitioned DISTINCT-train-hash index pruned to the partitions
+    those hashes land in (partitions read ≤ |probe hashes| of
     {_SRV_BUCKETS} — plan-gated). The serving plan scans ONLY the
     index with zero corpus windowing lineage; the answer is
     row-identical to q_dedup_decontam's row for the probe doc
@@ -258,18 +292,17 @@ _DCS_BATCH_ORACLE = f"""
 @query("q_dedup_decontam_served_batch", oracle=_DCS_BATCH_ORACLE)
 def q_dedup_decontam_served_batch(spark, sf_dir):
     """Batched eval-set decontamination from the materialized
-    train-span index: ONE bucket-pruned index read serves every
+    train-span index: ONE partition-pruned index read serves every
     test-split doc in the incoming batch (doc_id < {BATCH_LT} —
     [0, 9, 17] on the shipped fixtures), the composition the
     single-probe path points at. The batch's window hashes come from
     one pushed-down read (collected: bounded at |batch chars| /
-    {_SUB_S} rows); the scan prunes to the UNION of their buckets —
+    {_SUB_S} rows); the scan prunes to the UNION of their partitions —
     on the tiny fixture the ~30-hash union can cover all
-    {_SRV_BUCKETS} buckets (the same honest degeneration as the
-    ivf/lsh batch legs; production bucket counts are sized to
-    O(cluster cores), see tools/bench_served_pruning.py) — and the
-    broadcast (doc_id, h, cnt) probe table fans matches back per
-    doc. Per-doc rows are identical to the single-probe path and to
+    {_SRV_BUCKETS} partitions (the same honest degeneration as the
+    ivf/lsh batch legs; production partition counts are sized to
+    O(cluster cores)) — and the broadcast (doc_id, h, cnt) probe
+    table fans matches back per doc. Per-doc rows are identical to the single-probe path and to
     q_dedup_decontam's batch-audit rows (pinned in
     tests/test_r13_ops.py)."""
     return _served(spark, sf_dir, F.col("doc_id") < BATCH_LT)
@@ -288,121 +321,112 @@ def _ingest_hashes(spark, sf_dir):
     |batch chars|/{S} rows, never a corpus recompute. Split out so
     tests/test_r14_ops.py can gate the pushed filter on the write
     plan itself."""
-    return (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < DCS_INGEST_LT)  # pushed-down batch read
-        .filter(split_bucket() < SPLIT_TRAIN_LT)
-        .select(F.explode(F.expr(_WIN_EXPR)).alias("s"))
-        .select(h60(F.col("s")).alias("h"))
-        .distinct()
+    return _train_hashes(
+        load_table(spark, sf_dir, "documents").filter(
+            F.col("doc_id") < DCS_INGEST_LT  # pushed-down batch read
+        )
     )
 
 
 # Beyond this many batch hashes the merge switches from the IN-list
-# literal plan to the distributed SortMergeJoin form below. The trade,
-# MEASURED by tools/bench_merge_crossover.py (BASELINE.md r15): the
-# IN-list path costs ~0.9 ms per hash of driver/plan work (collect +
-# VALUES parse + isin), linear all the way to 89 s at 10⁵, while its
-# only advantage is the bucket-PRUNED existing-hash read vs the SMJ's
-# one full index scan. On the shipped fixture the index scan is ~free,
-# so SMJ wins at EVERY size; at a production-scale index the pruned
-# read is the win, and 10⁴ (≈9 s of plan cost) is the point where the
-# avoided index scan must be worth seconds to justify the literals.
+# literal plan to the distributed SortMergeJoin form below. The IN-list
+# path costs ~0.9 ms per hash of driver/plan work (collect + VALUES
+# parse + isin; measured r15, BASELINE.md), linear in the batch, while
+# its only advantage is the partition-pruned existing-hash read vs the
+# SMJ's one full index scan. 10⁴ (≈9 s of plan cost) is the point
+# where the avoided index scan must be worth seconds to justify the
+# literals.
 _DCS_INLIST_MAX = 10_000
 
 
 def _merge_ingest_batch(
-    spark, name: str, path: str, batch, inlist_max: int = _DCS_INLIST_MAX
+    spark, base, batch, out: str, inlist_max: int = _DCS_INLIST_MAX
 ) -> None:
-    """Dedupe-on-ingest merge of a distinct-hash ingest batch into the
-    bucketed span index ``name`` — two physical forms, one result:
+    """Dedupe-on-ingest merge: write to ``out`` (in the served layout)
+    the hashes of the distinct-hash ingest ``batch`` that are absent
+    from the span index ``base`` — two physical forms, one result:
 
     - ≤ ``inlist_max`` hashes: bounded collect (|batch chars|/S, same
-      bound as the serving probe collect), bucket-pruned existing-hash
-      point read (SelectedBucketsCount-gated like the serving plan),
-      LEFT ANTI against the literals, bucketed append.
-    - > ``inlist_max``: the at-scale form (VERDICT r14 item 5, was
-      prose-only) — the batch never touches the driver; LEFT ANTI as
-      a SortMergeJoin against the index, whose bucketBy/sortBy('h')
-      layout makes its side of the join shuffle-AND-sort-free (one
-      index scan per batch, only the batch side shuffles).
+      bound as the serving probe collect), partition-pruned
+      existing-hash point read (the serving read's shape), LEFT ANTI
+      against the literals.
+    - > ``inlist_max``: the at-scale form — the batch never touches
+      the driver; LEFT ANTI as a SortMergeJoin against one scan of
+      the index (both sides shuffle on h).
 
-    Both append only hashes absent from the index, preserving the
-    DISTINCT-h invariant the serving rollup's SUM depends on. The
-    branch probe is a single limit(inlist_max+1) collect — bounded by
-    construction, and its rows ARE the IN-list on the small branch,
-    so that path runs exactly one batch action and the probe/merge
-    rows cannot diverge even under a nondeterministic source. The
-    persist is SMJ-branch-conditional (VERDICT r16 item 1): the r15
-    unconditional persist-before-probe eagerly wrote the windowed
-    batch through the memory store on the common small-batch branch
-    too, where `batch` is never touched again after the probe — pure
-    overhead that the driver's r16 channel measured as a regression.
-    Now the common path pays only its bounded collect, and the
-    at-scale branch caches the batch before its one anti-join write
-    so the SMJ never re-runs the ingest windowing lineage."""
+    Keeping only absent hashes preserves the DISTINCT-h invariant the
+    serving rollup's SUM depends on. The branch probe is a single
+    limit(inlist_max+1) collect — bounded by construction, and its
+    rows ARE the IN-list on the small branch, so that path runs
+    exactly one batch action and the probe/merge rows cannot diverge
+    even under a nondeterministic source. Only the SMJ branch
+    persists the batch (VERDICT r16 item 1: on the common small
+    branch the probe is the batch's only action, so a cache there is
+    pure overhead), so its anti-join write never re-runs the ingest
+    windowing lineage. An empty batch writes nothing: ``out`` stays
+    an empty index."""
     probe_rows = batch.limit(inlist_max + 1).collect()
     if len(probe_rows) <= inlist_max:
         hs = sorted(int(r["h"]) for r in probe_rows)
-        if not hs:  # an empty ingest batch (degenerate corpus with
-            # no low-id train docs) has nothing to merge — and
-            # values_df has no empty form
-            return
-        batch_df = values_df(spark, [(h,) for h in hs], "h long")
-        existing = spark.table(name).filter(F.col("h").isin(hs))
-        new_rows = batch_df.join(existing, "h", "left_anti")
-        _write_spans(new_rows, name, path, mode="append")
+        if hs:  # values_df has no empty form
+            batch_df = values_df(spark, [(h,) for h in hs], "h long")
+            existing = _point_read(base, hs).select("h")
+            _write_spans(batch_df.join(existing, "h", "left_anti"), out)
         return
     batch = batch.persist()
     try:
         # hint('merge') pins the SMJ so the planner cannot broadcast
         # the (by-definition large here) batch side
-        new_rows = batch.hint("merge").join(
-            spark.table(name).select("h"), "h", "left_anti"
-        )
-        _write_spans(new_rows, name, path, mode="append")
+        new_rows = batch.hint("merge").join(base.select("h"), "h", "left_anti")
+        _write_spans(new_rows, out)
     finally:
         batch.unpersist()
 
 
 def _upserted_span_index(spark, sf_dir: str) -> str:
-    """The INCREMENTALLY MAINTAINED train-span index: base table
-    built from the pre-existing train corpus (doc_id >=
-    DCS_INGEST_LT) once, then the ingest batch's NEW hashes APPENDED
-    — bucketed saveAsTable append writes per-bucket files alongside
-    the base generation and SelectedBucketsCount pruning spans both
-    (the lsh_upsert precedent on the band index).
+    """The INCREMENTALLY MAINTAINED train-span index, registered as a
+    temp view; returns its name. Two published generations, each a
+    catalog.materialize directory in the served layout and read
+    together as one view:
 
-    The index's semantics are DISTINCT h, so a blind append would
-    double-count any batch hash already present (the serving rollup
-    SUMs matched probe counts). The merge is therefore
-    dedupe-on-ingest — see _merge_ingest_batch for the two physical
-    forms (IN-list point read vs at-scale SortMergeJoin) and the
-    bound on each. Maintenance cost is the batch's own windowing +
-    one pruned point read + a |new hashes|-row append — independent
-    of corpus size. A failed merge drops the base table
-    (session_table's publish guard, ADVICE r14/r15): an unmerged index
-    left registered would silently undercount contamination."""
-    fp = hashlib.md5(
-        f"up:{_index_fingerprint(sf_dir)}:{DCS_INGEST_LT}".encode()
-    ).hexdigest()[:12]
+    - the base, built once from the pre-existing train corpus
+      (doc_id >= DCS_INGEST_LT);
+    - the ingest delta, keyed on the ingest fingerprint: the batch's
+      hashes absent from the base (_merge_ingest_batch — the
+      dedupe-on-ingest merge, since a blind append would double-count
+      a batch hash already present in the SUM rollup).
+
+    Maintenance cost is the batch's own windowing + one pruned point
+    read + a |new hashes|-row write — independent of corpus size. A
+    failed merge publishes no delta (materialize removes its build
+    dir and re-raises), so an unmerged index is never served."""
     tag = sanitized_sf_tag(sf_dir)
-    name = f"train_spans_up_{tag}_{fp}"
+    fp = _index_fingerprint(sf_dir)
+    base_fp = hashlib.md5(f"up:{fp}:{DCS_INGEST_LT}".encode()).hexdigest()[:12]
+    # the ingest batch is documents' doc_id < DCS_INGEST_LT, so its
+    # fingerprint is the base's (same source, same cut)
+    delta_fp = hashlib.md5(f"ingest:{base_fp}".encode()).hexdigest()[:12]
 
-    def build(d: str) -> None:
-        path = os.path.join(d, "spans")
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        base_h = (
-            docs.filter(F.col("doc_id") >= DCS_INGEST_LT)
-            .filter(split_bucket() < SPLIT_TRAIN_LT)
-            .select(F.explode(F.expr(_WIN_EXPR)).alias("s"))
-            .select(h60(F.col("s")).alias("h"))
-            .distinct()
-        )
-        _write_spans(base_h, name, path)
-        _merge_ingest_batch(spark, name, path, _ingest_hashes(spark, sf_dir))
+    def build_base(d: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        _write_spans(_train_hashes(docs.filter(F.col("doc_id") >= DCS_INGEST_LT)), d)
 
-    return session_table(spark, _CACHE_ROOT, name, f"{tag}_dcsup-{fp}", build)
+    base_path = materialize(_CACHE_ROOT, f"{tag}_dcsup-{base_fp}", build_base)
+    base = _read_spans(spark, base_path)
+
+    def build_delta(d: str) -> None:
+        _merge_ingest_batch(spark, base, _ingest_hashes(spark, sf_dir), d)
+
+    delta_path = materialize(_CACHE_ROOT, f"{tag}_dcsdelta-{delta_fp}", build_delta)
+    view = memo_read(
+        spark,
+        delta_path,
+        lambda: base.unionByName(_read_spans(spark, delta_path)),
+        base,
+    )
+    name = f"train_spans_up_{tag}_{delta_fp}"
+    register_view(spark, name, view)
+    return name
 
 
 @query("q_dedup_decontam_upsert", oracle=_DCS_SERVED_ORACLE)
@@ -410,16 +434,16 @@ def q_dedup_decontam_upsert(spark, sf_dir):
     """Eval-doc contamination served from the INCREMENTALLY
     MAINTAINED train-span index — the maintenance leg of the
     q_dedup_decontam_served production story (VERDICT r13 item 4,
-    symmetrizing the serving trilogy): the bucketed hash index is
+    symmetrizing the serving trilogy): the partitioned hash index is
     built before the ingest batch exists (train docs with doc_id >=
     DCS_INGEST_LT), the batch's distinct window hashes are MERGED in
-    (one pushed-down batch read, dedupe-on-ingest via a bucket-pruned
-    anti-join — no corpus rescan, plan-gated in
-    tests/test_r14_ops.py), and the probe is served from the upserted
-    table with the same bucket-pruned plan as
-    q_dedup_decontam_served. The answer must be IDENTICAL to serving
-    from the full-corpus rebuild (pinned; the final table carries no
-    duplicate h by construction) — incremental maintenance is a
+    as a second generation (one pushed-down batch read,
+    dedupe-on-ingest via a partition-pruned anti-join — no corpus
+    rescan, plan-gated in tests/test_r14_ops.py), and the probe is
+    served from both generations with the same partition-pruned plan
+    as q_dedup_decontam_served. The answer must be IDENTICAL to
+    serving from the full-corpus rebuild (pinned; the generations
+    share no h by construction) — incremental maintenance is a
     physical change only, so the oracle is _DCS_SERVED_ORACLE
     unchanged.
 

@@ -18,9 +18,11 @@ Tiers (each served from its own materialized index):
    lsh_served.py's band index (shared _lsh_index — one index, both
    consumers); candidates = distinct partner docs sharing a band.
 3. contamination: TEST-split docs' strided window hashes against
-   operators/decontam_served.py's train-span index (shared
-   _train_span_index); train-split arrivals skip this tier (they are
-   joining the train side, not being evaluated against it).
+   operators/decontam_served.py's partitioned train-span index
+   (shared _train_span_index, published once per source fingerprint
+   and read partition-pruned); train-split arrivals skip this tier
+   (they are joining the train side, not being evaluated against
+   it).
 
 admitted = no exact dup AND no near-dup candidate AND no
 contaminated window.
@@ -34,9 +36,9 @@ streaming query, after q_stream_sink and q_stream_merge) that
 recomputes all three indexes in SQL.
 
 100 TB design: per-batch cost is |batch| local fingerprints plus
-three pruned point reads (SelectedBucketsCount / hash IN-lists —
-the serving plans, unchanged) and one appended verdict file; the
-indexes are maintained out-of-band by the upsert legs
+three pruned point reads (SelectedBucketsCount / PartitionFilters
+plus hash IN-lists — the serving plans, unchanged) and one appended
+verdict file; the indexes are maintained out-of-band by the upsert legs
 (q_dedup_lsh_upsert / q_sim_ivf_upsert / q_dedup_decontam_upsert),
 so gate throughput is independent of corpus size end to end.
 """
@@ -69,6 +71,7 @@ from datafusion_tpc_spark.functions.literals import values_df
 from datafusion_tpc_spark.operators.dedup import _WIN_EXPR
 from datafusion_tpc_spark.operators.decontam_served import (
     _DCS_WINS,
+    _point_read,
     _train_span_index,
 )
 from datafusion_tpc_spark.operators.lsh_served import (
@@ -127,9 +130,9 @@ def admission_gate(spark, sf_dir: str, batch_df, timings: dict | None = None):
     Serving shape per tier: fingerprint the batch in-engine (bounded
     collects — |batch| digests, ≤|batch|·4 band keys, ≤|batch
     chars|/16 window hashes), re-enter each as a VALUES literal, and
-    read each index pruned to the batch's own keys (bucket-pruned
-    point reads — plan-gated in tests/test_r14_ops.py). Zero corpus
-    lineage anywhere.
+    read each index pruned to the batch's own keys (bucket- or
+    partition-pruned point reads — plan-gated in
+    tests/test_r14_ops.py). Zero corpus lineage anywhere.
 
     Why the gate has NO SortMergeJoin fallback (r16, symmetry check
     vs decontam_served._merge_ingest_batch's dual form): the measured
@@ -280,8 +283,8 @@ def admission_gate(spark, sf_dir: str, batch_df, timings: dict | None = None):
             [(r["doc_id"], r["h"], r["cnt"]) for r in span_rows],
             "qid long, h long, cnt long",
         )
-        sidx = spark.table(span_name).filter(
-            F.col("h").isin(sorted({r["h"] for r in span_rows}))
+        sidx = _point_read(
+            spark.table(span_name), sorted({r["h"] for r in span_rows})
         )
         contam = (
             sidx.join(F.broadcast(sprobe), "h")

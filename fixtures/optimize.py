@@ -39,9 +39,12 @@ def ensure_optimized(sf_dir: str, table: str) -> str:
     the optimized file path. The file name carries the SOURCE's
     (mtime, size) fingerprint — the repo-wide derived-cache rule: a
     testdata drop replaces files at the same path, and a path-only
-    key would keep serving the bench stale bytes. The write goes to a
-    uuid temp file atomically renamed into place (two processes
-    racing a fixed '.tmp' would interleave into one corrupt file).
+    key would keep serving the bench stale bytes — and the layout
+    (``-rg{ROW_GROUP_ROWS}``, as in gen_logs.py), so a changed row
+    group size rewrites the copy instead of serving the old layout.
+    The write goes to a uuid temp file atomically renamed into place
+    (two processes racing a fixed '.tmp' would interleave into one
+    corrupt file).
     Superseded fingerprints, the legacy un-fingerprinted name, and
     crashed writers' orphan tmp files are reclaimed by the shared
     two-phase-marked prune (catalog.prune_stale_cache_dirs)."""
@@ -52,7 +55,7 @@ def ensure_optimized(sf_dir: str, table: str) -> str:
     src = os.path.join(sf_dir, f"{table}.parquet")
     fp = hashlib.md5(source_fingerprint(src).encode()).hexdigest()[:12]
     d = optimized_dir(sf_dir)
-    out = os.path.join(d, f"{table}-{fp}.parquet")
+    out = os.path.join(d, f"{table}-{fp}-rg{ROW_GROUP_ROWS}.parquet")
     if os.path.exists(out):
         return out
     os.makedirs(d, exist_ok=True)

@@ -6,6 +6,9 @@ gate) and materialize (the shared-cache build path). Filesystem-only
 from __future__ import annotations
 
 import os
+import re
+import signal
+import subprocess
 import sys
 import threading
 import time
@@ -132,3 +135,51 @@ def test_materialize_concurrent_cold_builds_once(tmp_path):
     assert len(calls) == 1
     assert paths == [os.path.join(root, "tag-fp")] * n
     assert os.listdir(root) == ["tag-fp"]
+
+
+def test_materialize_recovers_from_killed_builder(tmp_path):
+    """A builder process SIGKILLed inside ``build`` leaves its
+    ``<key>.<8 hex>`` dir half written and nothing published. The next
+    call builds and publishes a complete copy with the ready marker,
+    and the orphaned build dir gets its ``.superseded`` marker from the
+    two-phase prune (shared cache dirs are built by whichever process
+    comes first, so a killed first process must not wedge the rest)."""
+    root = str(tmp_path)
+    started = tmp_path / "started"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = f"""
+import os, sys, time
+sys.path.insert(0, {repo!r})
+from datafusion_tpc_spark.catalog import materialize
+
+def build(tmp):
+    with open(os.path.join(tmp, "part-0"), "wb") as f:
+        f.write(b"x" * 10)
+    open({str(started)!r}, "w").close()
+    time.sleep(600)
+
+materialize({root!r}, "tag-fp", build)
+"""
+    proc = subprocess.Popen([sys.executable, "-c", child])
+    try:
+        deadline = time.time() + 120
+        while not started.exists():
+            assert proc.poll() is None, "builder exited before the kill"
+            assert time.time() < deadline, "builder never started"
+            time.sleep(0.05)
+        os.kill(proc.pid, signal.SIGKILL)
+        proc.wait(timeout=60)
+    finally:
+        if proc.poll() is None:
+            proc.kill()
+            proc.wait()
+    started.unlink()
+    [orphan] = [e for e in os.listdir(root) if re.fullmatch(r"tag-fp\.[0-9a-f]{8}", e)]
+    assert os.listdir(os.path.join(root, orphan)) == ["part-0"]
+
+    path = materialize(root, "tag-fp", _fill)
+    assert path == os.path.join(root, "tag-fp")
+    assert sorted(os.listdir(path)) == [READY, "part-0", "part-1", "part-2"]
+    assert sorted(os.listdir(root)) == sorted(
+        ["tag-fp", orphan, orphan + ".superseded"]
+    )

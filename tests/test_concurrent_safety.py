@@ -185,24 +185,21 @@ def test_lsh_index_concurrent_cold(spark):
 
 def test_decontam_index_concurrent_cold(spark):
     """(r13) Two threads racing the train-span index build from a
-    cold cache: catalog.session_table's per-name lock serializes the
-    tableExists check and the build (saveAsTable is not atomic), both
-    served results must be identical, and the catalog entry must
-    survive for reuse."""
+    cold cache: catalog.materialize's key lock builds it once, so the
+    race must publish exactly one entry, identical served results, no
+    ``<key>.<uuid>`` build dir left and no duplicate h in the index."""
     from datafusion_tpc_spark.operators import decontam_served
 
-    # Derive the table name from the operator's own helper (ADVICE
-    # r13): an inline re-derivation of the md5 recipe would silently
-    # stop exercising the cold-build race if the recipe changed.
-    name = decontam_served._index_table_name(SF_DIR)
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
     shutil.rmtree(decontam_served._CACHE_ROOT, ignore_errors=True)
-
     fn = registry.QUERIES["q_dedup_decontam_served"]
     with ThreadPoolExecutor(max_workers=2) as pool:
         a, b = list(pool.map(lambda _: _rows(fn(spark, SF_DIR)), range(2)))
     assert a == b and len(a) == 1
-    assert spark.catalog.tableExists(name)
+    entries = os.listdir(decontam_served._CACHE_ROOT)
+    assert not _tmp_dirs(entries), entries
+    assert len([e for e in entries if not e.endswith(".superseded")]) == 1
+    idx = spark.table(decontam_served._train_span_index(spark, SF_DIR))
+    assert idx.count() == idx.select("h").distinct().count(), "duplicate h"
 
 
 def test_ivf_upsert_concurrent_cold(spark):
@@ -226,26 +223,21 @@ def test_ivf_upsert_concurrent_cold(spark):
 
 def test_decontam_upsert_concurrent_cold(spark):
     """(r14) Two threads racing the MERGED span-index build from a
-    cold cache: catalog.session_table's per-name lock serializes the
-    base write + merge-append of the upserted table (a concurrent
-    interleave could append the batch twice and break the DISTINCT-h
-    invariant), both served results identical, no duplicate h,
-    catalog entry survives."""
+    cold cache: the base generation and the ingest delta are each one
+    catalog.materialize key, so the race must publish exactly two
+    entries (base + delta), identical served results, no
+    ``<key>.<uuid>`` build dir left, and no duplicate h across the
+    generations (a double merge would break the DISTINCT-h
+    invariant)."""
     from datafusion_tpc_spark.operators import decontam_served
 
-    fn = registry.QUERIES["q_dedup_decontam_upsert"]
-    # cold: drop EVERY train_spans* catalog entry (base family too —
-    # rmtree'ing the cache root under a still-registered base table
-    # would leave a catalog entry pointing at deleted files and break
-    # later q_dedup_decontam_served calls in this session)
-    for r in spark.sql("SHOW TABLES").collect():
-        if r["tableName"].startswith("train_spans"):
-            spark.sql(f"DROP TABLE IF EXISTS {r['tableName']}")
     shutil.rmtree(decontam_served._CACHE_ROOT, ignore_errors=True)
+    fn = registry.QUERIES["q_dedup_decontam_upsert"]
     with ThreadPoolExecutor(max_workers=2) as pool:
         a, b = list(pool.map(lambda _: _rows(fn(spark, SF_DIR)), range(2)))
     assert a == b and len(a) == 1
-    up_name = decontam_served._upserted_span_index(spark, SF_DIR)
-    u = spark.table(up_name)
-    assert u.count() == u.distinct().count(), "duplicate h after race"
-    assert spark.catalog.tableExists(up_name)
+    entries = os.listdir(decontam_served._CACHE_ROOT)
+    assert not _tmp_dirs(entries), entries
+    assert len([e for e in entries if not e.endswith(".superseded")]) == 2
+    u = spark.table(decontam_served._upserted_span_index(spark, SF_DIR))
+    assert u.count() == u.select("h").distinct().count(), "duplicate h after race"

@@ -21,7 +21,7 @@ import re
 import pyarrow.parquet as pq
 
 from datafusion_tpc_spark import registry
-from fixtures import gen_logs
+from fixtures import gen_logs, optimize
 from fixtures.optimize import ROW_GROUP_ROWS
 
 from tests.conftest import SF_DIR
@@ -42,6 +42,26 @@ def test_every_logs_sf_is_row_grouped():
         assert meta.num_rows == rows
         groups = [meta.row_group(i).num_rows for i in range(meta.num_row_groups)]
         assert max(groups) <= ROW_GROUP_ROWS, (sf, groups)
+
+
+def test_optimized_copy_is_row_grouped_and_layout_named(tmp_path, monkeypatch):
+    """The bench's layout-optimized copy holds all of the source's rows
+    in row groups of at most ROW_GROUP_ROWS, and the layout is in the
+    file name, so a changed ROW_GROUP_ROWS writes a new copy instead of
+    serving the old layout."""
+    monkeypatch.setattr(optimize, "_CACHE_ROOT", str(tmp_path))
+    rows = pq.ParquetFile(os.path.join(SF_DIR, "lineitem.parquet")).metadata.num_rows
+    paths = []
+    for rg in (ROW_GROUP_ROWS, 7_000):
+        monkeypatch.setattr(optimize, "ROW_GROUP_ROWS", rg)
+        path = optimize.ensure_optimized(SF_DIR, "lineitem")
+        assert path.endswith(f"-rg{rg}.parquet"), path
+        meta = pq.ParquetFile(path).metadata
+        assert meta.num_rows == rows
+        groups = [meta.row_group(i).num_rows for i in range(meta.num_row_groups)]
+        assert max(groups) <= rg, (rg, groups)
+        paths.append(path)
+    assert paths[0] != paths[1]
 
 
 def test_generate_reclaims_legacy_file_and_leaves_no_tmp(tmp_path, monkeypatch):

@@ -21,14 +21,33 @@ def _final_plan(df):
     )
 
 
-def test_decontam_served_plan_is_bucket_pruned_and_window_free(spark):
+def _partitions_read(df):
+    """(partitions read, partitions in the table) for each scan of a
+    partitioned Parquet table in df's final (post-AQE) plan, from the
+    scan's "number of partitions read" metric — the partition-pruning
+    twin of SelectedBucketsCount."""
+    from tests.test_plans import _walk
+
+    return [
+        (
+            n.metrics().apply("numPartitions").value(),
+            n.relation().location().partitionSpec().partitions().size(),
+        )
+        for n in _walk(df._jdf.queryExecution().executedPlan())
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+        and n.relation().partitionSchema().nonEmpty()
+    ]
+
+
+def test_decontam_served_plan_is_partition_pruned_and_window_free(spark):
     """q_dedup_decontam_served: the serving plan must (a) read the
-    train-span index bucket-pruned to the probe's distinct hashes
-    (SelectedBucketsCount <= |probe windows| of _SRV_BUCKETS), (b)
-    contain ZERO corpus windowing lineage (no Generate/explode — the
-    corpus was windowed once at index write; the probe's own windows
-    were computed and collected before this plan), and (c) scan only
-    the index — documents.parquet must not appear.
+    train-span index partition-pruned to the probe's distinct hashes
+    (partitions read <= min(|probe hashes|, _SRV_BUCKETS), out of
+    _SRV_BUCKETS), (b) contain ZERO corpus windowing lineage (no
+    Generate/explode — the corpus was windowed once at index write;
+    the probe's own windows were computed and collected before this
+    plan), and (c) scan only the index — documents.parquet must not
+    appear.
 
     Gated at sf0.001 ON PURPOSE: there PROBE_DOC is contaminated
     (7/7 windows) so the pruned read survives into the final plan; at
@@ -56,13 +75,60 @@ def test_decontam_served_plan_is_bucket_pruned_and_window_free(spark):
             )
         }
     )
-    m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", final)
-    assert m, final
-    assert int(m.group(1)) <= min(n_hashes, _SRV_BUCKETS)
-    assert int(m.group(2)) == _SRV_BUCKETS
+    [(read, total)] = _partitions_read(df)
+    assert 1 <= read <= min(n_hashes, _SRV_BUCKETS), (read, n_hashes)
+    assert total == _SRV_BUCKETS
     assert final.count("Scan parquet") == 1
     assert "documents.parquet" not in final, "corpus scan in serving plan"
     assert "Generate" not in final, "corpus windowing lineage in serving plan"
+
+
+def test_decontam_index_served_across_processes(spark):
+    """The index is built once per source fingerprint, not once per
+    process: after it is published, a child Python process with a
+    fresh SparkSession serves q_dedup_decontam_served at sf0.001 with
+    the same rows and writes nothing under the cache root — no
+    per-process `<tag>_dcs-<fp>-<pid>` copy."""
+    import os
+    import subprocess
+    import sys
+
+    from datafusion_tpc_spark.operators.decontam_served import _CACHE_ROOT
+
+    sf = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
+    fn = registry.QUERIES["q_dedup_decontam_served"]
+    want = [tuple(r) for r in fn(spark, sf).collect()]
+
+    def snapshot():
+        out = {}
+        for d, dirs, files in os.walk(_CACHE_ROOT):
+            for n in dirs + files:
+                st = os.stat(os.path.join(d, n))
+                out[os.path.join(d, n)] = (st.st_mtime_ns, st.st_size)
+        return out
+
+    before = snapshot()
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from datafusion_tpc_spark import registry
+from datafusion_tpc_spark.session import get_spark
+registry.load_all()
+spark = get_spark(app_name="dcs-child", cpus=2, shuffle_partitions=2)
+fn = registry.QUERIES["q_dedup_decontam_served"]
+print([tuple(r) for r in fn(spark, {sf!r}).collect()])
+spark.stop()
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", child],
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip().splitlines()[-1] == repr(want)
+    assert snapshot() == before, "a serving process wrote to the index cache"
 
 
 def test_decontam_served_clean_probe_elides_read(spark):

@@ -1,8 +1,8 @@
 """Round-14 operator invariants: the maintenance leg symmetrized
 across the serving trilogy (VERDICT r13 item 4) — q_sim_ivf_upsert
 (partition-append of persisted-codebook assignments, no retrain) and
-q_dedup_decontam_upsert (bucketed merge-on-ingest of a train batch's
-span hashes, no corpus rescan) — plus the streaming admission-gate
+q_dedup_decontam_upsert (merge-on-ingest of a train batch's span
+hashes into a second partitioned generation, no corpus rescan) — plus the streaming admission-gate
 capstone composing all three serving indexes (q_stream_admission:
 micro-batch independence, index-only verdict plans, per-tier
 semantics)."""
@@ -13,6 +13,7 @@ import re
 
 from datafusion_tpc_spark import registry
 from tests.conftest import SF_DIR
+from tests.test_r13_ops import _partitions_read
 
 registry.load_all()
 
@@ -169,14 +170,14 @@ def test_decontam_upsert_matches_full_rebuild(spark):
 def test_decontam_upsert_ingest_is_batch_only(spark):
     """The merge's source reads ONLY the ingest batch (pushed-down
     doc_id < DCS_INGEST_LT, one scan), and the dedupe-on-ingest read
-    of the existing index is bucket-pruned (SelectedBucketsCount) —
+    of the existing index is partition-pruned (partitions read <=
+    min(|batch hashes|, _SRV_BUCKETS) of each generation) —
     maintenance cost is independent of corpus size."""
-    from pyspark.sql import functions as F
-
     from datafusion_tpc_spark.operators.decontam_served import (
         _SRV_BUCKETS,
         DCS_INGEST_LT,
         _ingest_hashes,
+        _point_read,
         _upserted_span_index,
     )
 
@@ -186,23 +187,35 @@ def test_decontam_upsert_ingest_is_batch_only(spark):
         rf"PushedFilters: \[.*LessThan\(doc_id,{DCS_INGEST_LT}\)", iplan
     ), iplan
     assert iplan.count("Scan parquet") == 1
-    # the merge-time existing-hash read: bucket-pruned point read of
-    # the index, same shape as the serving read
+    # the merge-time existing-hash read: partition-pruned point read
+    # of the index, same shape as the serving read
     name = _upserted_span_index(spark, SF_DIR)
     hs = sorted(int(r["h"]) for r in ing.collect())
-    probe = spark.table(name).filter(F.col("h").isin(hs))
+    probe = _point_read(spark.table(name), hs)
     probe.collect()
-    pplan = _final_plan(probe)
-    m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", pplan)
-    assert m and int(m.group(2)) == _SRV_BUCKETS, pplan
+    scans = _partitions_read(probe)
+    assert scans and all(
+        read <= min(len(hs), _SRV_BUCKETS) and total <= _SRV_BUCKETS
+        for read, total in scans
+    ), scans
 
 
 def test_decontam_upsert_serving_plan_unchanged(spark):
-    """The upserted table serves through the exact q_dedup_decontam_
-    served plan: one index scan, zero corpus windowing lineage.
-    Pruning survival on a dirty probe is gated at sf0.001 (at sf0.01
-    the clean probe lets AQE elide the index read — itself correct,
-    the r13 clean-probe fast path)."""
+    """The upserted index serves through the q_dedup_decontam_served
+    plan: one partition-pruned scan per generation (base + ingest
+    delta, each reading <= min(|probe hashes|, _SRV_BUCKETS)
+    partitions of at most _SRV_BUCKETS), zero corpus windowing
+    lineage. Pruning survival on a dirty probe is gated at sf0.001 (at
+    sf0.01 the clean probe lets AQE elide the index read — itself
+    correct, the r13 clean-probe fast path)."""
+    from pyspark.sql import functions as F
+
+    from datafusion_tpc_spark.operators.decontam_served import (
+        _SRV_BUCKETS,
+        PROBE_DOC,
+        _probe_hash_counts,
+    )
+
     sf = "/root/testdata/sf0.001"
     df = registry.QUERIES["q_dedup_decontam_upsert"](spark, sf)
     rows = df.collect()
@@ -210,78 +223,62 @@ def test_decontam_upsert_serving_plan_unchanged(spark):
     full = registry.QUERIES["q_dedup_decontam_served"](spark, sf).collect()
     assert rows == full
     final = _final_plan(df)
-    m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", final)
-    assert m, final
-    assert final.count("Scan parquet") == 1
+    n_hashes = len(
+        {r["h"] for r in _probe_hash_counts(spark, sf, F.col("doc_id") == PROBE_DOC)}
+    )
+    scans = _partitions_read(df)
+    assert len(scans) == 2, scans
+    base_read, base_total = scans[0]
+    assert 1 <= base_read and base_total == _SRV_BUCKETS, scans
+    for read, total in scans:
+        assert read <= min(n_hashes, _SRV_BUCKETS) and total <= _SRV_BUCKETS
+    assert final.count("Scan parquet") == 2
+    assert "documents.parquet" not in final, "corpus scan in serving plan"
     assert "Generate" not in final, "corpus windowing lineage in serving plan"
 
 
 def test_decontam_upsert_multi_generation(spark):
-    """Merge-per-batch forever: three successive train batches merged
-    into a base index must keep (a) the no-duplicate-h invariant, (b)
+    """Merge-per-batch forever: three generations (a base index, then
+    two successive train batches each merged against everything
+    before it) must keep (a) the no-duplicate-h invariant, (b)
     set-equality with the full rebuild, (c) served-row identity, and
-    (d) bucket pruning across all file generations."""
+    (d) partition pruning in every generation's scan."""
     import shutil
 
     from pyspark.sql import functions as F
 
     from datafusion_tpc_spark.catalog import load_table
-    from datafusion_tpc_spark.functions.digest import SPLIT_TRAIN_LT, h60, split_bucket
-    from datafusion_tpc_spark.functions.literals import values_df
     from datafusion_tpc_spark.operators.decontam_served import (
         _SRV_BUCKETS,
-        _WIN_EXPR,
         PROBE_DOC,
-        _index_table_name,
+        _merge_ingest_batch,
+        _point_read,
+        _read_spans,
         _served,
+        _train_hashes,
         _train_span_index,
+        _write_spans,
     )
 
     name = "dcs_upsert_gen3_test"
-    path = "/tmp/dcs_upsert_gen3_test"
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    shutil.rmtree(path, ignore_errors=True)
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-
-    def batch_hashes(pred):
-        return (
-            docs.filter(pred)
-            .filter(split_bucket() < SPLIT_TRAIN_LT)
-            .select(F.explode(F.expr(_WIN_EXPR)).alias("s"))
-            .select(h60(F.col("s")).alias("h"))
-            .distinct()
-        )
-
+    paths = [f"/tmp/dcs_upsert_gen3_test/g{i}" for i in range(3)]
+    shutil.rmtree("/tmp/dcs_upsert_gen3_test", ignore_errors=True)
+    docs = load_table(spark, SF_DIR, "documents")
     slices = (
         F.col("doc_id") >= 100,                                # base corpus
         (F.col("doc_id") >= 50) & (F.col("doc_id") < 100),     # ingest 1
         F.col("doc_id") < 50,                                  # ingest 2
     )
     try:
-        (
-            batch_hashes(slices[0])
-            .write.mode("overwrite")
-            .option("path", path)
-            .bucketBy(_SRV_BUCKETS, "h")
-            .sortBy("h")
-            .saveAsTable(name)
-        )
-        for pred in slices[1:]:
-            hs = sorted(int(r["h"]) for r in batch_hashes(pred).collect())
-            batch_df = values_df(spark, [(h,) for h in hs], "h long")
-            existing = spark.table(name).filter(F.col("h").isin(hs))
-            (
-                batch_df.join(existing, "h", "left_anti")
-                .write.mode("append")
-                .option("path", path)
-                .bucketBy(_SRV_BUCKETS, "h")
-                .sortBy("h")
-                .saveAsTable(name)
-            )
-        u = spark.table(name)
+        _write_spans(_train_hashes(docs.filter(slices[0])), paths[0])
+        u = _read_spans(spark, paths[0])
+        for pred, path in zip(slices[1:], paths[1:]):
+            _merge_ingest_batch(spark, u, _train_hashes(docs.filter(pred)), path)
+            u = u.unionByName(_read_spans(spark, path))
         assert u.count() == u.distinct().count(), "duplicate h"
         f = spark.table(_train_span_index(spark, SF_DIR))
         assert u.exceptAll(f).count() == 0 and f.exceptAll(u).count() == 0
+        u.createOrReplaceTempView(name)
         df = _served(
             spark, SF_DIR, F.col("doc_id") == PROBE_DOC, index_name=name
         )
@@ -290,9 +287,17 @@ def test_decontam_upsert_multi_generation(spark):
             spark, SF_DIR
         ).collect()
         assert rows == full
+        # three indexed hashes prune each of the three generations
+        hs = [int(r["h"]) for r in f.limit(3).collect()]
+        pruned = _point_read(spark.table(name), hs)
+        pruned.collect()
+        scans = _partitions_read(pruned)
+        assert len(scans) == 3, scans
+        assert all(read <= len(hs) for read, _ in scans), scans
+        assert all(total <= _SRV_BUCKETS for _, total in scans), scans
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(path, ignore_errors=True)
+        spark.catalog.dropTempView(name)
+        shutil.rmtree("/tmp/dcs_upsert_gen3_test", ignore_errors=True)
 
 
 # ---------------------------------------------------- admission gate

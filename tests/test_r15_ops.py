@@ -2,16 +2,17 @@
 
 1. VERDICT r14 item 5: the decontam merge's at-scale fallback is now
    CODE — _merge_ingest_batch switches from the IN-list point read to
-   a bucketed SortMergeJoin LEFT ANTI beyond _DCS_INLIST_MAX batch
-   hashes. Both physical forms must produce the identical post-merge
-   index (the lsh_upsert identical-to-rebuild precedent).
-2. ADVICE r14 item 1: the two-step publish in _upserted_span_index is
-   guarded — a failed merge append must not leave the UNMERGED base
-   index registered and silently servable.
+   a SortMergeJoin LEFT ANTI beyond _DCS_INLIST_MAX batch hashes.
+   Both physical forms must produce the identical post-merge index
+   (the lsh_upsert identical-to-rebuild precedent).
+2. ADVICE r14 item 1: the two-step publish of the upserted indexes is
+   guarded — a failed merge must not leave an UNMERGED index
+   servable.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -31,34 +32,20 @@ def _final_plan(df):
     )
 
 
-def _scratch_index(spark, name, path, base_pred):
-    """Fresh bucketed base index over the base_pred train slice."""
+def _scratch_index(spark, path, base_pred):
+    """Fresh partitioned span index over the base_pred train slice,
+    written to ``path``; returns its DataFrame."""
     from datafusion_tpc_spark.catalog import load_table
-    from datafusion_tpc_spark.functions.digest import (
-        SPLIT_TRAIN_LT,
-        h60,
-        split_bucket,
-    )
     from datafusion_tpc_spark.operators.decontam_served import (
-        _SRV_BUCKETS,
-        _WIN_EXPR,
+        _read_spans,
+        _train_hashes,
+        _write_spans,
     )
 
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
     shutil.rmtree(path, ignore_errors=True)
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    (
-        docs.filter(base_pred)
-        .filter(split_bucket() < SPLIT_TRAIN_LT)
-        .select(F.explode(F.expr(_WIN_EXPR)).alias("s"))
-        .select(h60(F.col("s")).alias("h"))
-        .distinct()
-        .write.mode("overwrite")
-        .option("path", path)
-        .bucketBy(_SRV_BUCKETS, "h")
-        .sortBy("h")
-        .saveAsTable(name)
-    )
+    docs = load_table(spark, SF_DIR, "documents")
+    _write_spans(_train_hashes(docs.filter(base_pred)), path)
+    return _read_spans(spark, path)
 
 
 def test_decontam_merge_smj_path_identical_to_inlist(spark):
@@ -71,41 +58,42 @@ def test_decontam_merge_smj_path_identical_to_inlist(spark):
     from datafusion_tpc_spark.operators.decontam_served import (
         _ingest_hashes,
         _merge_ingest_batch,
+        _read_spans,
     )
 
     base_pred = F.col("doc_id") >= 25  # overlaps the <50 ingest batch
-    names = ("dcs_merge_inlist_t", "dcs_merge_smj_t")
-    paths = ("/tmp/dcs_merge_inlist_t", "/tmp/dcs_merge_smj_t")
+    root = "/tmp/dcs_merge_forms_t"
+    shutil.rmtree(root, ignore_errors=True)
+    merged = []
     try:
-        for name, path, inlist_max in zip(names, paths, (10_000, 0)):
-            _scratch_index(spark, name, path, base_pred)
+        base = _scratch_index(spark, os.path.join(root, "base"), base_pred)
+        for inlist_max in (10_000, 0):
+            out = os.path.join(root, f"delta{inlist_max}")
             _merge_ingest_batch(
                 spark,
-                name,
-                path,
+                base,
                 _ingest_hashes(spark, SF_DIR),
+                out,
                 inlist_max=inlist_max,
             )
-        a, b = (spark.table(n) for n in names)
-        assert a.count() > 0
+            merged.append(base.unionByName(_read_spans(spark, out)))
+        a, b = merged
+        assert a.count() > base.count(), "merge added nothing"
         assert a.count() == a.distinct().count(), "duplicate h (inlist)"
         assert b.count() == b.distinct().count(), "duplicate h (smj)"
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     finally:
-        for name, path in zip(names, paths):
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-            shutil.rmtree(path, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def test_decontam_merge_smj_plan_shape(spark):
     """The >threshold branch's anti-join must plan as a SortMergeJoin
-    (the hint forbids broadcasting the large batch side), and the
-    index side must be sort/shuffle-free off its bucketBy/sortBy('h')
-    layout — zero Exchange operators on the table side of the join."""
+    (the hint forbids broadcasting the large batch side) that reads
+    the index once: one Exchange on each side — the batch side's
+    DISTINCT exchange already partitions it on h, and the index side
+    (both generations of the upserted view) shuffles once."""
     from datafusion_tpc_spark.operators.decontam_served import (
         _ingest_hashes,
-    )
-    from datafusion_tpc_spark.operators.decontam_served import (
         _upserted_span_index,
     )
 
@@ -116,28 +104,25 @@ def test_decontam_merge_smj_plan_shape(spark):
     plan = _final_plan(joined)
     assert "SortMergeJoin" in plan and "LeftAnti" in plan, plan
     assert "BroadcastHashJoin" not in plan, plan
-    # index side reads pre-sorted buckets: exactly ONE Exchange in the
-    # whole plan (the batch side's), none feeding the table scan
-    assert plan.count("Exchange") == 1, plan
+    assert plan.count("Exchange") == 2, plan
 
 
 def test_decontam_upsert_publish_guard(spark, monkeypatch):
-    """A merge failure after the base saveAsTable must drop the table:
-    before the guard, every later call in the session saw tableExists
-    and served the unmerged index (missing batch hashes, contamination
-    undercounted vs the oracle)."""
+    """A failed merge must publish no ingest delta: materialize
+    removes its build dir and re-raises, so no later call serves the
+    unmerged base (missing batch hashes, contamination undercounted
+    vs the oracle); the un-patched rebuild then serves the full
+    answer."""
     from datafusion_tpc_spark.operators import decontam_served as dcs
 
-    # force a fresh build path
-    import hashlib
+    def deltas():
+        if not os.path.isdir(dcs._CACHE_ROOT):
+            return []
+        return [e for e in os.listdir(dcs._CACHE_ROOT) if "_dcsdelta-" in e]
 
-    fp = hashlib.md5(
-        f"up:{dcs._index_fingerprint(SF_DIR)}:{dcs.DCS_INGEST_LT}".encode()
-    ).hexdigest()[:12]
-    from datafusion_tpc_spark.catalog import sanitized_sf_tag
-
-    name = f"train_spans_up_{sanitized_sf_tag(SF_DIR)}_{fp}"
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    # force a fresh delta build
+    for e in deltas():
+        shutil.rmtree(os.path.join(dcs._CACHE_ROOT, e), ignore_errors=True)
 
     def boom(*a, **k):
         raise RuntimeError("merge failed mid-flight")
@@ -145,9 +130,7 @@ def test_decontam_upsert_publish_guard(spark, monkeypatch):
     monkeypatch.setattr(dcs, "_merge_ingest_batch", boom)
     with pytest.raises(RuntimeError, match="mid-flight"):
         dcs._upserted_span_index(spark, SF_DIR)
-    assert not spark.catalog.tableExists(name), (
-        "unmerged index left registered after a failed merge"
-    )
+    assert deltas() == [], "unmerged delta left behind after a failed merge"
     # un-patched rebuild restores the served path end-to-end
     monkeypatch.undo()
     rows = registry.QUERIES["q_dedup_decontam_upsert"](spark, SF_DIR).collect()

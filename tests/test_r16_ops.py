@@ -1,10 +1,10 @@
 """Round-16 invariants (a zero-birth round — no new query ids):
 
-1. ADVICE r15 item on the publish guards: the cleanup DROP inside the
-   guard is best-effort — when the session is broken enough that the
-   DROP itself raises, the ORIGINAL failure must still propagate
-   (before the fix, the cleanup error replaced it and the root cause
-   was lost).
+1. ADVICE r15 item on the LSH upsert's publish guard: the cleanup
+   DROP inside the guard is best-effort — when the session is broken
+   enough that the DROP itself raises, the ORIGINAL failure must
+   still propagate (before the fix, the cleanup error replaced it and
+   the root cause was lost).
 2. ADVICE r15 item on _merge_ingest_batch: the batch is persisted
    across the branch probe, so the SMJ branch runs the ingest lineage
    once and probe + join see the same rows.
@@ -28,57 +28,12 @@ from tests.conftest import SF_DIR
 registry.load_all()
 
 
-def _decontam_upsert_name(spark):
-    from datafusion_tpc_spark.catalog import sanitized_sf_tag
-    from datafusion_tpc_spark.operators import decontam_served as dcs
-
-    fp = hashlib.md5(
-        f"up:{dcs._index_fingerprint(SF_DIR)}:{dcs.DCS_INGEST_LT}".encode()
-    ).hexdigest()[:12]
-    return f"train_spans_up_{sanitized_sf_tag(SF_DIR)}_{fp}"
-
-
-def test_publish_guard_cleanup_failure_keeps_original_error(
-    spark, monkeypatch
-):
-    """Merge fails AND the cleanup DROP fails (broken-session
-    simulation): the merge's RuntimeError must propagate, not the
-    cleanup's. The table stays registered (cleanup could not run) —
-    that is the accepted residue of a broken session, vs the r15
-    behavior of masking the root cause."""
-    from datafusion_tpc_spark.operators import decontam_served as dcs
-
-    name = _decontam_upsert_name(spark)
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-
-    def boom(*a, **k):
-        raise RuntimeError("merge failed mid-flight")
-
-    real_sql = spark.sql
-
-    def broken_sql(stmt, *a, **k):
-        if stmt.lstrip().upper().startswith("DROP TABLE"):
-            raise RuntimeError("cleanup also failed: session dead")
-        return real_sql(stmt, *a, **k)
-
-    monkeypatch.setattr(dcs, "_merge_ingest_batch", boom)
-    monkeypatch.setattr(spark, "sql", broken_sql)
-    with pytest.raises(RuntimeError, match="mid-flight"):
-        dcs._upserted_span_index(spark, SF_DIR)
-    monkeypatch.undo()
-
-    # manual cleanup (the guard could not drop), then the un-patched
-    # rebuild must restore the served path end-to-end
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    rows = registry.QUERIES["q_dedup_decontam_upsert"](spark, SF_DIR).collect()
-    full = registry.QUERIES["q_dedup_decontam_served"](spark, SF_DIR).collect()
-    assert rows == full and len(rows) == 1
-
-
 def test_lsh_guard_cleanup_failure_keeps_original_error(spark, monkeypatch):
-    """Same pin for the LSH upsert guard (the two guards share the
-    pattern; a regression in one is most likely a shared-edit
-    regression in both)."""
+    """The ingest append fails AND the cleanup DROP fails
+    (broken-session simulation): the append's error must propagate,
+    not the cleanup's.
+    The table stays registered (cleanup could not run) — the accepted
+    residue of a broken session."""
     from datafusion_tpc_spark.catalog import sanitized_sf_tag
     from datafusion_tpc_spark.operators import lsh_served as lsh
 
@@ -145,14 +100,14 @@ def test_merge_batch_persisted_across_branch_probe(spark, monkeypatch):
     from tests.test_r15_ops import _scratch_index
     from pyspark.sql import functions as F
 
-    name, path = "r16_persist_probe", "/tmp/r16_persist_probe"
-    _scratch_index(spark, name, path, F.col("doc_id") % 2 == 0)
+    root = "/tmp/r16_persist_probe"
+    base = _scratch_index(spark, f"{root}/base", F.col("doc_id") % 2 == 0)
     try:
         batch = spark.range(0, 100).select(
             (F.col("id") * 97 % (1 << 60)).alias("h")
         )
         # SMJ branch (100 rows > inlist_max=10): persist + unpersist
-        dcs._merge_ingest_batch(spark, name, path, batch, inlist_max=10)
+        dcs._merge_ingest_batch(spark, base, batch, f"{root}/smj", inlist_max=10)
         assert calls["persist"] >= 1, "batch not persisted on SMJ branch"
         assert calls["unpersist"] >= calls["persist"], (
             "persisted batch leaked past the merge"
@@ -163,14 +118,13 @@ def test_merge_batch_persisted_across_branch_probe(spark, monkeypatch):
         small = spark.range(100, 120).select(
             (F.col("id") * 97 % (1 << 60)).alias("h")
         )
-        dcs._merge_ingest_batch(spark, name, path, small)
+        dcs._merge_ingest_batch(spark, base, small, f"{root}/inlist")
         assert calls["persist"] == 0, (
             "small-batch branch persisted the batch (VERDICT r16 "
             "item 1: the probe is the only action there)"
         )
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(path, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def test_table_memo_identity_and_fingerprint_invalidation(
