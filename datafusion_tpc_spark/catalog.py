@@ -21,6 +21,7 @@ metadata-only (footer reads), no data motion.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import os
 import threading
@@ -255,10 +256,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def pid_alive(pid: int) -> bool:
     """Is a cache/run dir's owning process still running? Used by the
-    streaming run-dir pruners (ADVICE r14): a dir name embeds its
-    creator's PID so a concurrent process (driver rehearsal alongside
-    bench) never rmtree's another's in-flight checkpoint mid-stream.
-    kill(pid, 0) probes without signaling; EPERM means
+    streaming run-dir pruners (ADVICE r14) and ``run_dir``: a dir name
+    embeds its creator's PID so a concurrent process (a correctness
+    rehearsal alongside the bench) never rmtree's another's in-flight
+    checkpoint mid-stream. kill(pid, 0) probes without signaling; EPERM means
     alive-but-other-user."""
     try:
         os.kill(pid, 0)
@@ -267,6 +268,48 @@ def pid_alive(pid: int) -> bool:
     except PermissionError:
         return True
     return True
+
+
+@contextlib.contextmanager
+def run_dir(root: str, live: set[str], max_age_s: int = 21600):
+    """Reserve a fresh ``<root>/<pid>-<uuid>`` directory path for one
+    sink execution, holding its name in ``live`` for the block's
+    duration. The caller writes there and returns a lazy read of it.
+
+    First, reclaim earlier runs. A run whose owning PID is dead goes at
+    once: nobody holds a read of it. A run of a live process (this one
+    included) that is not in ``live`` goes only once older than
+    ``max_age_s``. That age gate protects a DataFrame the run returned
+    and a caller may still collect; a reader that outlives 6 h is
+    unsupported, as in ``prune_stale_cache_dirs``. A name without a
+    PID prefix is also age-gated."""
+    import shutil
+    import time
+    import uuid
+
+    cutoff = time.time() - max_age_s
+    try:
+        runs = os.listdir(root)
+    except OSError:
+        runs = []
+    for name in runs:
+        if name in live:
+            continue
+        path = os.path.join(root, name)
+        pid, dash, _ = name.partition("-")
+        if not (dash and pid.isdigit() and not pid_alive(int(pid))):
+            try:
+                if os.path.getmtime(path) >= cutoff:
+                    continue
+            except OSError:
+                continue
+        shutil.rmtree(path, ignore_errors=True)
+    run = f"{os.getpid()}-{uuid.uuid4().hex[:12]}"
+    live.add(run)
+    try:
+        yield os.path.join(root, run)
+    finally:
+        live.discard(run)
 
 
 def prune_stale_cache_dirs(

@@ -70,23 +70,35 @@ def _write_bands(bands, name: str, path: str, mode: str = "overwrite") -> None:
     )
 
 
+def _index_names(sf_dir: str, upsert: bool = False) -> tuple[str, str]:
+    """Catalog table name and ``session_table`` dir key of the band
+    index (``upsert``: the incrementally maintained one) for this
+    source fingerprint and recipe. Tests derive the names from here, so
+    a recipe change cannot retarget them at a stale name (the decontam
+    ``_index_fingerprint`` convention)."""
+    st = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
+    recipe = f"{st}:{_K}:{_BANDS}:{_SRV_BUCKETS}"
+    if upsert:
+        recipe = f"up:{recipe}:{BATCH_N}"
+    fp = hashlib.md5(recipe.encode()).hexdigest()[:12]
+    tag = sanitized_sf_tag(sf_dir)
+    if upsert:
+        return f"lsh_upsert_{tag}_{fp}", f"{tag}_lshup-{fp}"
+    return f"lsh_bands_{tag}_{fp}", f"{tag}_lsh-{fp}"
+
+
 def _lsh_index(spark, sf_dir: str) -> str:
     """Ensure the bucketed band table exists for this source
     fingerprint; return its catalog name. Same once-per-(session, sf,
     fingerprint) build/race/staleness story as operators/bucketing.py
     (catalog.session_table)."""
-    st = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    fp = hashlib.md5(
-        f"{st}:{_K}:{_BANDS}:{_SRV_BUCKETS}".encode()
-    ).hexdigest()[:12]
-    tag = sanitized_sf_tag(sf_dir)
-    name = f"lsh_bands_{tag}_{fp}"
+    name, dir_key = _index_names(sf_dir)
 
     def build(d: str) -> None:
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
         _write_bands(_band_projection(docs), name, os.path.join(d, "bands"))
 
-    return session_table(spark, _CACHE_ROOT, name, f"{tag}_lsh-{fp}", build)
+    return session_table(spark, _CACHE_ROOT, name, dir_key, build)
 
 
 _LSH_SERVED_ORACLE = f"""
@@ -250,12 +262,7 @@ def _upserted_index(spark, sf_dir: str) -> str:
     publish guard drops the base table if the ingest append fails, so
     a batch-less index is never served (near-dup candidates would
     silently undercount)."""
-    st = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    fp = hashlib.md5(
-        f"up:{st}:{_K}:{_BANDS}:{_SRV_BUCKETS}:{BATCH_N}".encode()
-    ).hexdigest()[:12]
-    tag = sanitized_sf_tag(sf_dir)
-    name = f"lsh_upsert_{tag}_{fp}"
+    name, dir_key = _index_names(sf_dir, upsert=True)
 
     def build(d: str) -> None:
         path = os.path.join(d, "bands")
@@ -268,7 +275,7 @@ def _upserted_index(spark, sf_dir: str) -> str:
         # own minhash, independent of corpus size
         _write_bands(_ingest_projection(spark, sf_dir), name, path, mode="append")
 
-    return session_table(spark, _CACHE_ROOT, name, f"{tag}_lshup-{fp}", build)
+    return session_table(spark, _CACHE_ROOT, name, dir_key, build)
 
 
 @query("q_dedup_lsh_upsert", oracle=_LSH_SERVED_ORACLE)

@@ -26,12 +26,10 @@ O(table).
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import functions as F
 
-from datafusion_tpc_spark.catalog import load_table
+from datafusion_tpc_spark.catalog import load_table, run_dir
 from datafusion_tpc_spark.registry import query
 
 _DPO_CACHE = os.path.join(
@@ -68,38 +66,7 @@ def q_sink_dpo(spark, sf_dir):
     shared session (review r7: thread A's finally-restore of 'static'
     lands between thread B's set and B's write, so B's overwrite runs
     static and truncates every other partition)."""
-    # cross-process-safe stale cleanup (q_sink_json pattern)
-    if os.path.isdir(_DPO_CACHE):
-        import time
-
-        # 6 h gate (the prune_stale_cache_dirs reader-support
-        # convention; review r8): releasing the run id in the
-        # finally below makes this age gate the ONLY protection
-        # for a caller still holding the returned lazy read — a
-        # reader that outlives 6 h is unsupported repo-wide, but
-        # a 10-minute window was genuinely reachable by a held
-        # DataFrame re-collected late in a long session.
-        cutoff = time.time() - 21600
-        for stale in os.listdir(_DPO_CACHE):
-            p = os.path.join(_DPO_CACHE, stale)
-            try:
-                old = os.path.getmtime(p) < cutoff
-            except OSError:
-                continue
-            if stale not in _LIVE_RUNS and old:
-                shutil.rmtree(p, ignore_errors=True)
-    run = uuid.uuid4().hex[:12]
-    _LIVE_RUNS.add(run)
-    path = os.path.join(_DPO_CACHE, run)
-
-    # Release the run id once the read-back plan is defined (ADVICE
-    # r7: _LIVE_RUNS only grew, so a long-lived process never
-    # reclaimed its own completed run dirs — two full partitioned
-    # copies of orders each per execution). The 6 h age gate above
-    # still protects the returned lazy read: a later execution can
-    # only sweep this dir once it is >6 h old — past any supported
-    # reader lifetime, not just the driver's immediate collect.
-    try:
+    with run_dir(_DPO_CACHE, _LIVE_RUNS) as path:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
         )
@@ -117,8 +84,6 @@ def q_sink_dpo(spark, sf_dir):
         )
 
         back = spark.read.schema(_ORDERS_SCHEMA).parquet(path)
-    finally:
-        _LIVE_RUNS.discard(run)
     return (
         back.groupBy("o_orderstatus")
         .agg(

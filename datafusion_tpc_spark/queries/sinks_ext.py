@@ -10,12 +10,10 @@ round-6 driver window (first 50 registrations) is untouched.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import functions as F
 
-from datafusion_tpc_spark.catalog import load_table
+from datafusion_tpc_spark.catalog import load_table, run_dir
 from datafusion_tpc_spark.registry import query
 
 _JSON_SINK_CACHE = os.path.join(
@@ -62,35 +60,12 @@ def q_sink_json(spark, sf_dir):
     docs = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_mktsegment", "c_acctbal"
     )
-    # Stale-run cleanup must be cross-process safe (ADVICE r6): a
-    # concurrent process's in-flight run dir is not in THIS process's
-    # _LIVE_RUNS, so membership alone would rmtree it mid-write. Gate
-    # deletion on age too — only dirs older than 10 minutes (far past
-    # any single execution) are reclaimed.
-    if os.path.isdir(_JSON_SINK_CACHE):
-        import time
-
-        cutoff = time.time() - 21600  # 6 h reader-support gate (review r8)
-        for stale in os.listdir(_JSON_SINK_CACHE):
-            p = os.path.join(_JSON_SINK_CACHE, stale)
-            try:
-                old_enough = os.path.getmtime(p) < cutoff
-            except OSError:
-                continue
-            if stale not in _LIVE_RUNS and old_enough:
-                shutil.rmtree(p, ignore_errors=True)
-    run = uuid.uuid4().hex[:12]
-    _LIVE_RUNS.add(run)
-    path = os.path.join(_JSON_SINK_CACHE, run)
-    # Release the run id once the read-back plan is defined (ADVICE
-    # r7, via q_sink_dpo): otherwise a long-lived process never
-    # reclaims its own completed run dirs. The 6 h age gate above
-    # still protects the returned lazy read.
-    try:
+    # The run id is released once the read-back plan is defined, so a
+    # long-lived process reclaims its own completed runs; run_dir's
+    # age gate still protects the returned lazy read.
+    with run_dir(_JSON_SINK_CACHE, _LIVE_RUNS) as path:
         docs.write.mode("overwrite").json(path)
         back = spark.read.schema(_CUSTOMER_SCHEMA).json(path)
-    finally:
-        _LIVE_RUNS.discard(run)
     return (
         back.groupBy("c_mktsegment")
         .agg(

@@ -14,6 +14,14 @@ Scale notes (100 TB / 1000-executor design):
   effective fan-out — we set an advisory size instead of hand-picking
   partition counts per query.
 - Arrow enabled so the (rare) Pandas-UDF paths are batch-vectorized.
+- ``spark.buffer.pageSize`` is a fixed 4 MiB: a task's Tungsten memory
+  grows one page at a time as its data needs it, the way each of the
+  reference's per-core workers holds only its current morsel. Spark's
+  default (execution memory / cores / 16, capped at 64 MiB) made every
+  sorting, aggregating or broadcast-probing task take a 64 MiB page,
+  even over a few hundred KB. A task's page table holds 8,192 pages,
+  so 4 MiB pages still let one task address 32 GiB: a large sort at
+  100 TB grows page by page and spills past its share.
 """
 
 from __future__ import annotations
@@ -46,6 +54,9 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # a task's memory grows by 4 MiB pages, not by heap-derived
+        # 64 MiB ones (module docstring)
+        .config("spark.buffer.pageSize", "4m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
@@ -82,6 +93,10 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
       which the Spark Parquet reader otherwise rejects — FIXTURES.md
       §9; catalog.load_table handles both units),
     - AQE on (cheap insurance; default in 4.x anyway).
+
+    ``spark.buffer.pageSize`` is not among them: it is a static core
+    conf, read once when the SparkContext starts, so a session built
+    elsewhere keeps its own page size (get_spark sets 4 MiB).
     """
     for key, value in (
         ("spark.sql.session.timeZone", "UTC"),

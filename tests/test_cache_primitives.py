@@ -1,7 +1,8 @@
 """The catalog cache primitives every derived cache and size gate goes
 through: source_fingerprint, data_bytes / small_table (the scale
-gate) and materialize (the shared-cache build path). Filesystem-only
-— no Spark session needed."""
+gate), materialize (the shared-cache build path) and run_dir (the
+sinks' per-execution directories). Filesystem-only — no Spark session
+needed."""
 
 from __future__ import annotations
 
@@ -20,6 +21,7 @@ from datafusion_tpc_spark.catalog import (
     SMALL_TABLE_BYTES,
     data_bytes,
     materialize,
+    run_dir,
     small_table,
     source_fingerprint,
 )
@@ -182,4 +184,37 @@ materialize({root!r}, "tag-fp", build)
     assert sorted(os.listdir(path)) == [READY, "part-0", "part-1", "part-2"]
     assert sorted(os.listdir(root)) == sorted(
         ["tag-fp", orphan, orphan + ".superseded"]
+    )
+
+
+def test_run_dir_reclaims_dead_owners_at_once(tmp_path):
+    """run_dir names runs ``<pid>-<uuid>``. A run of a dead process is
+    reclaimed on the next call whatever its age; a run of a live
+    process, or a name without a PID, only past the 6 h age gate; a
+    name held in ``live`` never. The new name is held only inside the
+    block."""
+    root = str(tmp_path)
+    old = time.time() - 7 * 3600
+    entries = {
+        "999999999-dead": None,  # beyond any pid_max: never alive
+        f"{os.getpid()}-fresh": None,
+        f"{os.getpid()}-old": old,
+        "1-old-but-held": old,  # PID 1 is always alive
+        "legacyuuid": None,
+        "123456789012": None,  # a legacy all-digit uuid is no PID
+        "legacyold": old,
+    }
+    for name, mtime in entries.items():
+        os.makedirs(os.path.join(root, name))
+        if mtime is not None:
+            os.utime(os.path.join(root, name), (mtime, mtime))
+    live = {"1-old-but-held"}
+    with run_dir(root, live) as path:
+        run = os.path.basename(path)
+        assert re.fullmatch(rf"{os.getpid()}-[0-9a-f]{{12}}", run), run
+        assert run in live
+        assert not os.path.exists(path)  # reserved; the caller writes it
+    assert live == {"1-old-but-held"}
+    assert sorted(os.listdir(root)) == sorted(
+        ["1-old-but-held", f"{os.getpid()}-fresh", "legacyuuid", "123456789012"]
     )

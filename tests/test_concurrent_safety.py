@@ -163,16 +163,7 @@ def test_lsh_index_concurrent_cold(spark):
 
     # cold: drop the catalog entry and the data dir (session-scoped
     # catalog + on-disk cache)
-    st = os.stat(os.path.join(SF_DIR, "documents.parquet"))
-    import hashlib as _h
-
-    fp = _h.md5(
-        f"{st.st_mtime_ns}:{st.st_size}:{lsh_served._K}:"
-        f"{lsh_served._BANDS}:{lsh_served._SRV_BUCKETS}".encode()
-    ).hexdigest()[:12]
-    from datafusion_tpc_spark.catalog import sanitized_sf_tag
-
-    name = f"lsh_bands_{sanitized_sf_tag(SF_DIR)}_{fp}"
+    name, _ = lsh_served._index_names(SF_DIR)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     shutil.rmtree(lsh_served._CACHE_ROOT, ignore_errors=True)
 

@@ -143,18 +143,9 @@ def test_lsh_upsert_publish_guard(spark, monkeypatch):
     registers before the ingest append): a failed append must drop the
     table, or later calls serve batch-less candidates (near-dup
     undercount)."""
-    import hashlib
-
-    from datafusion_tpc_spark.catalog import sanitized_sf_tag
     from datafusion_tpc_spark.operators import lsh_served as lsh
-    import os
 
-    st = os.stat(os.path.join(SF_DIR, "documents.parquet"))
-    fp = hashlib.md5(
-        f"up:{st.st_mtime_ns}:{st.st_size}:{lsh._K}:{lsh._BANDS}:"
-        f"{lsh._SRV_BUCKETS}:{lsh.BATCH_N}".encode()
-    ).hexdigest()[:12]
-    name = f"lsh_upsert_{sanitized_sf_tag(SF_DIR)}_{fp}"
+    name, _ = lsh._index_names(SF_DIR, upsert=True)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
 
     def boom(*a, **k):

@@ -17,7 +17,6 @@
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 import pytest
@@ -34,15 +33,9 @@ def test_lsh_guard_cleanup_failure_keeps_original_error(spark, monkeypatch):
     not the cleanup's.
     The table stays registered (cleanup could not run) — the accepted
     residue of a broken session."""
-    from datafusion_tpc_spark.catalog import sanitized_sf_tag
     from datafusion_tpc_spark.operators import lsh_served as lsh
 
-    st = os.stat(os.path.join(SF_DIR, "documents.parquet"))
-    fp = hashlib.md5(
-        f"up:{st.st_mtime_ns}:{st.st_size}:{lsh._K}:{lsh._BANDS}:"
-        f"{lsh._SRV_BUCKETS}:{lsh.BATCH_N}".encode()
-    ).hexdigest()[:12]
-    name = f"lsh_upsert_{sanitized_sf_tag(SF_DIR)}_{fp}"
+    name, _ = lsh._index_names(SF_DIR, upsert=True)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
 
     def boom(*a, **k):

@@ -1,12 +1,16 @@
-"""Bench-tooling invariants: BASELINE.md row parsing feeds the
-regression comparator, so a misparse silently un-guards a query
-(review r7 — the master-table sentinel was the literal '0.1' sf cell,
-which also matched any per-query row whose median is exactly 0.1 s)."""
+"""Bench-tooling invariants: tools/ab.py's parent-vs-change summary,
+and BASELINE.md row parsing, which feeds the regression comparator, so
+a misparse silently un-guards a query (review r7 — the master-table
+sentinel was the literal '0.1' sf cell, which also matched any
+per-query row whose median is exactly 0.1 s)."""
 
 from __future__ import annotations
 
+import json
 import os
 import sys
+
+import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
 
@@ -156,3 +160,60 @@ def test_gen_baseline_index_idempotent_and_resolved():
     )
     assert set(in_block) == set(parsed)
     assert all(float(in_block[q]) == round(parsed[q], 4) for q in parsed)
+
+
+def test_ab_summary_over_canned_runs():
+    """tools/ab.py's summary: medians, the parent's quartiles, wins and
+    the verdict against each bound, over pairs where both sides report;
+    a run without a result line counts as failed and drops its pair."""
+    from ab import PREFIX, format_summary, parse_records, summarize
+
+    def line(pair, side, qps, lat, mem, rc=0):
+        metrics = {
+            "qps": {"value": qps, "unit": "1/s"},
+            "latency_geomean_s": {"value": lat, "unit": "s"},
+            "peak_exec_mem_mb": {"value": mem, "unit": "MB"},
+        }
+        result = {"correct": rc == 0, "metrics": metrics}
+        return PREFIX + json.dumps(
+            {"pair": pair, "side": side, "seed": pair, "rc": rc, "result": result}
+        )
+
+    lines = [
+        line(0, "parent", 4.0, 0.20, 132.0),
+        line(0, "change", 4.1, 0.30, 18.0),
+        line(1, "change", 3.9, 0.30, 18.0),
+        line(1, "parent", 4.2, 0.21, 132.0),
+        line(2, "parent", 4.1, 0.22, 132.0),
+        line(2, "change", 4.0, 0.30, 18.0),
+        "perfbench-notes {}",
+        PREFIX + json.dumps({"pair": 3, "side": "parent", "seed": 3, "rc": 3, "result": None}),
+        line(3, "change", 9.9, 0.01, 1.0),
+    ]
+    spec = [
+        {"name": "qps", "unit": "1/s", "better": "higher", "bound": 0.25},
+        {"name": "latency_geomean_s", "unit": "s", "better": "lower", "bound": 0.25},
+        {"name": "peak_exec_mem_mb", "unit": "MB", "better": "lower", "bound": 0.05},
+        {"name": "setup_s", "unit": "s", "better": "lower", "bound": 0.25},
+    ]
+    summary = summarize(parse_records(lines), spec)
+    rows = {r["name"]: r for r in summary["rows"]}
+    assert set(rows) == {"qps", "latency_geomean_s", "peak_exec_mem_mb"}
+    assert summary["failed"] == {"parent": 1, "change": 0}
+
+    qps = rows["qps"]
+    assert (qps["parent_median"], qps["change_median"]) == (4.1, 4.0)
+    assert (qps["parent_q1"], qps["parent_q3"]) == pytest.approx((4.05, 4.15))
+    assert (qps["wins"], qps["pairs"], qps["verdict"]) == (1, 3, "flat")
+
+    lat = rows["latency_geomean_s"]
+    assert lat["rel"] == pytest.approx(-0.09 / 0.21)
+    assert (lat["wins"], lat["verdict"]) == (0, "worse")
+
+    mem = rows["peak_exec_mem_mb"]
+    assert (mem["wins"], mem["parent_q1"], mem["parent_q3"]) == (3, 132.0, 132.0)
+    assert mem["verdict"] == "better"
+
+    text = format_summary(summary)
+    assert "peak_exec_mem_mb" in text and "3/3" in text
+    assert "failed runs: parent 1, change 0" in text
