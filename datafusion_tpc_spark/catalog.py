@@ -254,6 +254,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return memo_read(spark, src, read, opt)
 
 
+# How long a cache or run directory is kept after it stops being live:
+# longer than any realistic run (the driver flags a stall at 1 h, full
+# pytest+bench is <30 min). A reader that outlives it is unsupported.
+_READER_MAX_AGE_S = 6 * 3600
+
+
 def pid_alive(pid: int) -> bool:
     """Is a cache/run dir's owning process still running? Used by the
     streaming run-dir pruners (ADVICE r14) and ``run_dir``: a dir name
@@ -271,7 +277,7 @@ def pid_alive(pid: int) -> bool:
 
 
 @contextlib.contextmanager
-def run_dir(root: str, live: set[str], max_age_s: int = 21600):
+def run_dir(root: str, live: set[str]):
     """Reserve a fresh ``<root>/<pid>-<uuid>`` directory path for one
     sink execution, holding its name in ``live`` for the block's
     duration. The caller writes there and returns a lazy read of it.
@@ -279,15 +285,15 @@ def run_dir(root: str, live: set[str], max_age_s: int = 21600):
     First, reclaim earlier runs. A run whose owning PID is dead goes at
     once: nobody holds a read of it. A run of a live process (this one
     included) that is not in ``live`` goes only once older than
-    ``max_age_s``. That age gate protects a DataFrame the run returned
-    and a caller may still collect; a reader that outlives 6 h is
-    unsupported, as in ``prune_stale_cache_dirs``. A name without a
-    PID prefix is also age-gated."""
+    ``_READER_MAX_AGE_S`` (6 h). That age gate protects a DataFrame the
+    run returned and a caller may still collect, as in
+    ``prune_stale_cache_dirs``. A name without a PID prefix is also
+    age-gated."""
     import shutil
     import time
     import uuid
 
-    cutoff = time.time() - max_age_s
+    cutoff = time.time() - _READER_MAX_AGE_S
     try:
         runs = os.listdir(root)
     except OSError:
@@ -317,7 +323,6 @@ def prune_stale_cache_dirs(
     live_key: str,
     *,
     prune_legacy: bool = False,
-    max_age_s: int = 21600,
     extra: tuple[str, ...] = (),
 ) -> None:
     """Reclaim superseded fingerprint cache entries (dirs OR files)
@@ -333,11 +338,9 @@ def prune_stale_cache_dirs(
     just-superseded-but-old entry out from under a concurrent reader.
     Instead, the first prune call after supersession drops a 0-byte
     `<name>.superseded` marker; the entry is removed only once the
-    MARKER is older than max_age_s (6 h — longer than any realistic
-    run: the driver flags a stall at 1 h, full pytest+bench is
-    <30 min). Callers invoke this right after building a new
-    fingerprint, so each stale entry survives until the second
-    build event ≥ 6 h later — the leak is bounded at ~2 superseded
+    MARKER is older than _READER_MAX_AGE_S (6 h). Callers invoke
+    this right after building a new fingerprint, so each stale entry
+    survives until the second build event ≥ 6 h later — the leak is bounded at ~2 superseded
     copies per cache, and a reader that outlives 6 h across a
     testdata swap is unsupported.
 
@@ -349,7 +352,7 @@ def prune_stale_cache_dirs(
     import time
 
     prefix = live_key.split("-", 1)[0] + "-"
-    cutoff = time.time() - max_age_s
+    cutoff = time.time() - _READER_MAX_AGE_S
     try:
         sibs = os.listdir(root)
     except OSError:

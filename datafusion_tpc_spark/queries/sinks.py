@@ -14,20 +14,22 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil
-import uuid
 
 from pyspark.sql import functions as F
 
-from datafusion_tpc_spark.catalog import load_table, materialize, source_fingerprint
+from datafusion_tpc_spark.catalog import (
+    load_table,
+    materialize,
+    run_dir,
+    source_fingerprint,
+)
 from datafusion_tpc_spark.registry import query
 
 _SINK_CACHE = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".cache", "avro_sink"
 )
 
-# run dirs created by this process — excluded from pruning (a prior
-# call's lazily-read result may still point at its dir)
+# run dirs of this process's in-flight calls (catalog.run_dir)
 _LIVE_RUNS: set[str] = set()
 
 
@@ -54,20 +56,13 @@ def q_sink_avro(spark, sf_dir):
     from datafusion_tpc_spark.sources.avro_py import register
 
     register(spark)
-    # prune prior runs, but never a dir created by this process — a
-    # lazily-returned DataFrame from an earlier call still reads it
-    if os.path.isdir(_SINK_CACHE):
-        for stale in os.listdir(_SINK_CACHE):
-            if stale not in _LIVE_RUNS:
-                shutil.rmtree(os.path.join(_SINK_CACHE, stale), ignore_errors=True)
-    run_name = uuid.uuid4().hex[:12]
-    _LIVE_RUNS.add(run_name)
-    out = os.path.join(_SINK_CACHE, run_name)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    docs.write.format("pyavro").mode("overwrite").option("path", out).save()
-    return spark.read.format("pyavro").load(out)
+    # run_dir's age gate protects the returned lazy read
+    with run_dir(_SINK_CACHE, _LIVE_RUNS) as out:
+        docs.write.format("pyavro").mode("overwrite").option("path", out).save()
+        return spark.read.format("pyavro").load(out)
 
 
 _CORRUPT_DIR = os.path.join(

@@ -33,6 +33,20 @@ def spark():
     s.stop()
 
 
+def jobs_launched(spark, group: str, run) -> list[int]:
+    """Spark jobs ``run()`` launches, counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # listener events arrive asynchronously; drain them before reading
+    spark._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def ddb():
     """DuckDB with the same views the driver pre-registers."""

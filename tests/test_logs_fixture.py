@@ -24,7 +24,7 @@ from datafusion_tpc_spark import registry
 from fixtures import gen_logs, optimize
 from fixtures.optimize import ROW_GROUP_ROWS
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_launched
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _LOGS_QUERIES = ("q_logs_scan", "q_logs_filter", "q_logs_agg")
@@ -82,20 +82,6 @@ def test_generate_reclaims_legacy_file_and_leaves_no_tmp(tmp_path, monkeypatch):
     assert pq.ParquetFile(path).metadata.num_rows == gen_logs._ROWS["0.001"]
 
 
-def _jobs_launched(spark, group: str, build) -> list[int]:
-    """Spark jobs ``build()`` launches, counted under a job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # listener events arrive asynchronously; drain them before reading
-    spark._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-    return list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_repeat_builds_launch_no_spark_job(spark):
     """A second build of each q_logs_* callable and of the derived
     partsupp in one session is a memo hit: no schema inference, no
@@ -107,7 +93,7 @@ def test_repeat_builds_launch_no_spark_job(spark):
     launched = {}
     for name, build in builds.items():
         build(spark, SF_DIR)
-        launched[name] = _jobs_launched(
+        launched[name] = jobs_launched(
             spark, f"rebuild-{name}", lambda b=build: b(spark, SF_DIR)
         )
     assert launched == {name: [] for name in builds}, launched

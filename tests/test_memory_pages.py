@@ -11,7 +11,7 @@ from __future__ import annotations
 import pytest
 
 from datafusion_tpc_spark import registry
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_launched
 
 registry.load_all()
 
@@ -22,20 +22,11 @@ def _completed_stages(spark, group: str, run) -> list[tuple[int, int, float]]:
     """(stage id, numTasks, peakExecutionMemory MiB) of every completed
     stage of the jobs ``run()`` launches under job group ``group``. A
     stage's peak is the sum of its tasks' peaks."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        run()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jsc = spark._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty(60_000)
-    tracker = sc.statusTracker()
+    tracker = spark.sparkContext.statusTracker()
     stage_ids = {
-        s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds
+        s for j in jobs_launched(spark, group, run) for s in tracker.getJobInfo(j).stageIds
     }
-    store = jsc.statusStore()
+    store = spark._jsc.sc().statusStore()
     out = []
     for sid in sorted(stage_ids):
         st = store.lastStageAttempt(sid)

@@ -165,40 +165,49 @@ def test_gen_baseline_index_idempotent_and_resolved():
 def test_ab_summary_over_canned_runs():
     """tools/ab.py's summary: medians, the parent's quartiles, wins and
     the verdict against each bound, over pairs where both sides report;
-    a run without a result line counts as failed and drops its pair."""
+    a run without a result line counts as failed and drops its pair.
+    Records of another workload are skipped; a second run of one seed
+    on one side is an error."""
     from ab import PREFIX, format_summary, parse_records, summarize
 
-    def line(pair, side, qps, lat, mem, rc=0):
+    def line(pair, side, qps, lat, mem, cpu, rc=0, workload="olap"):
         metrics = {
             "qps": {"value": qps, "unit": "1/s"},
             "latency_geomean_s": {"value": lat, "unit": "s"},
             "peak_exec_mem_mb": {"value": mem, "unit": "MB"},
+            "cpu_s_per_op": {"value": cpu, "unit": "s"},
         }
         result = {"correct": rc == 0, "metrics": metrics}
         return PREFIX + json.dumps(
-            {"pair": pair, "side": side, "seed": pair, "rc": rc, "result": result}
+            {"workload": workload, "pair": pair, "side": side, "seed": pair, "rc": rc,
+             "result": result}
         )
 
     lines = [
-        line(0, "parent", 4.0, 0.20, 132.0),
-        line(0, "change", 4.1, 0.30, 18.0),
-        line(1, "change", 3.9, 0.30, 18.0),
-        line(1, "parent", 4.2, 0.21, 132.0),
-        line(2, "parent", 4.1, 0.22, 132.0),
-        line(2, "change", 4.0, 0.30, 18.0),
+        line(0, "parent", 4.0, 0.20, 132.0, 0.5),
+        line(0, "change", 4.1, 0.30, 18.0, 0.9),
+        line(1, "change", 3.9, 0.30, 18.0, 0.9),
+        line(1, "parent", 4.2, 0.21, 132.0, 1.0),
+        line(2, "parent", 4.1, 0.22, 132.0, 1.5),
+        line(2, "change", 4.0, 0.30, 18.0, 1.6),
         "perfbench-notes {}",
-        PREFIX + json.dumps({"pair": 3, "side": "parent", "seed": 3, "rc": 3, "result": None}),
-        line(3, "change", 9.9, 0.01, 1.0),
+        PREFIX + json.dumps({"workload": "olap", "pair": 3, "side": "parent", "seed": 3,
+                             "rc": 3, "result": None}),
+        line(3, "change", 9.9, 0.01, 1.0, 0.1),
+        line(0, "parent", 1.0, 9.0, 999.0, 9.0, workload="llm_curation"),
     ]
     spec = [
         {"name": "qps", "unit": "1/s", "better": "higher", "bound": 0.25},
         {"name": "latency_geomean_s", "unit": "s", "better": "lower", "bound": 0.25},
         {"name": "peak_exec_mem_mb", "unit": "MB", "better": "lower", "bound": 0.05},
+        {"name": "cpu_s_per_op", "unit": "s", "better": "lower", "bound": 0.25},
         {"name": "setup_s", "unit": "s", "better": "lower", "bound": 0.25},
     ]
-    summary = summarize(parse_records(lines), spec)
+    records = parse_records(lines, "olap")
+    assert len(records) == 8
+    summary = summarize(records, spec)
     rows = {r["name"]: r for r in summary["rows"]}
-    assert set(rows) == {"qps", "latency_geomean_s", "peak_exec_mem_mb"}
+    assert set(rows) == {"qps", "latency_geomean_s", "peak_exec_mem_mb", "cpu_s_per_op"}
     assert summary["failed"] == {"parent": 1, "change": 0}
 
     qps = rows["qps"]
@@ -214,6 +223,16 @@ def test_ab_summary_over_canned_runs():
     assert (mem["wins"], mem["parent_q1"], mem["parent_q3"]) == (3, 132.0, 132.0)
     assert mem["verdict"] == "better"
 
+    # the parent's IQR (0.75-1.25) is half its median, wider than the
+    # bound, and the change won 1 pair of 3: no move can be told apart
+    cpu = rows["cpu_s_per_op"]
+    assert (cpu["parent_q1"], cpu["parent_q3"]) == pytest.approx((0.75, 1.25))
+    assert cpu["rel"] == pytest.approx(0.1)
+    assert (cpu["wins"], cpu["verdict"]) == (1, "unresolved")
+
     text = format_summary(summary)
     assert "peak_exec_mem_mb" in text and "3/3" in text
     assert "failed runs: parent 1, change 0" in text
+
+    with pytest.raises(ValueError, match="two parent runs of seed 0"):
+        summarize(records + parse_records(lines[:1], "olap"), spec)

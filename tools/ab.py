@@ -12,16 +12,20 @@ run the parent first, odd pairs the change, so host drift falls on both
 sides alike. The parent runs from a clone of
 ``--parent`` under ``--workdir`` (kept and reused by later calls); the
 change is this checkout's working tree. Every run prints one
-``ab-run {...}`` line, so saved outputs can be summarized again, alone
-or together, with ``--from``.
+``ab-run {...}`` line naming its workload, so saved outputs can be
+summarized again, alone or together, with ``--from``; lines of other
+workloads are skipped. Two runs of one seed on one side are an error:
+give each call its own ``--seed`` range.
 
 The summary gives, for each metric of ``BENCHMARK.json`` (the per-layer
 ones with ``--trace 1``), each side's median, the parent's quartiles,
 the pairs the change won and a verdict against the metric's bound:
 ``worse`` when the change's median is worse than the parent's by more
-than the bound, ``better`` when it won at least 9 pairs in 10 and its
-median moved by more than the parent's interquartile range, ``flat``
-otherwise.
+than the bound; ``unresolved`` when the parent's interquartile range,
+relative to its median, is wider than the bound and the change did not
+win every pair, so the runs cannot tell a move inside the bound from
+none; ``better`` when it won at least 9 pairs in 10 and its median moved
+by more than the parent's interquartile range; ``flat`` otherwise.
 """
 
 from __future__ import annotations
@@ -72,8 +76,10 @@ def run_once(cwd: str, workload: str, seed: int, seconds: float, trace: int) -> 
     return {"rc": proc.returncode, "result": result}
 
 
-def parse_records(lines) -> list[dict]:
-    return [json.loads(line[len(PREFIX):]) for line in lines if line.startswith(PREFIX)]
+def parse_records(lines, workload: str) -> list[dict]:
+    """The ``ab-run`` records of ``workload`` among ``lines``."""
+    records = (json.loads(line[len(PREFIX):]) for line in lines if line.startswith(PREFIX))
+    return [r for r in records if r.get("workload") == workload]
 
 
 def _value(record: dict, name: str) -> float | None:
@@ -86,10 +92,14 @@ def summarize(records: list[dict], metrics: list[dict]) -> dict:
     """Per-metric medians, the parent's quartiles, the change's wins
     and a verdict, over the pairs where both sides reported a value.
     A pair is the two runs of one seed, so saved outputs of several
-    calls with distinct seeds summarize together."""
+    calls with distinct seeds summarize together; a second run of a
+    seed on one side raises ValueError."""
     sides: dict[int, dict[str, dict]] = {}
     for r in records:
-        sides.setdefault(r["seed"], {})[r["side"]] = r
+        by_side = sides.setdefault(r["seed"], {})
+        if r["side"] in by_side:
+            raise ValueError(f"two {r['side']} runs of seed {r['seed']}")
+        by_side[r["side"]] = r
     failed = {
         side: sum(
             1 for r in records
@@ -119,8 +129,11 @@ def summarize(records: list[dict], metrics: list[dict]) -> dict:
         gain = (c_med - p_med) if higher else (p_med - c_med)
         rel = gain / abs(p_med) if p_med else 0.0
         bound = m.get("bound")
+        spread = (q3 - q1) / abs(p_med) if p_med else 0.0
         if bound is not None and rel < -bound:
             verdict = "worse"
+        elif bound is not None and spread > bound and wins < len(pairs):
+            verdict = "unresolved"
         elif wins >= WIN_SHARE * len(pairs) and gain > q3 - q1:
             verdict = "better"
         else:
@@ -169,7 +182,7 @@ def main() -> int:
         records = []
         for path in args.saved:
             with open(path) as f:
-                records += parse_records(f)
+                records += parse_records(f, args.workload)
     else:
         if not (args.parent and args.workdir):
             p.error("--parent and --workdir are required unless --from is given")
@@ -178,14 +191,19 @@ def main() -> int:
         for i in range(args.pairs):
             order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
             for side in order:
-                rec = {"pair": i, "side": side, "seed": args.seed + i}
+                rec = {"workload": args.workload, "pair": i, "side": side,
+                       "seed": args.seed + i}
                 rec.update(run_once(dirs[side], args.workload, args.seed + i,
                                     spec["run_seconds"], args.trace))
                 print(PREFIX + json.dumps(rec), flush=True)
                 records.append(rec)
     print(f"{args.workload}: {len({r['seed'] for r in records})} pairs")
     metrics = spec["per_layer"] if args.trace else spec["end_to_end"]
-    print(format_summary(summarize(records, metrics)))
+    try:
+        summary = summarize(records, metrics)
+    except ValueError as e:
+        p.error(str(e))
+    print(format_summary(summary))
     return 0
 
 
